@@ -49,8 +49,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def clear_run_memos() -> None:
     """Drop every cross-invocation scratch memo: the scoped persist
-    cache (dedup/similarity/textstats/graph scratch frames) and the
-    graph census-stats memo.  Timing harnesses call this before EACH
+    cache (dedup/similarity/textstats/graph scratch frames), the
+    graph census-stats memo and the input row-count cache.  Timing harnesses call this before EACH
     timed execution so every invocation computes from the parquet
     inputs — the memos exist to bound cache growth and share work
     WITHIN one invocation, never to carry results across runs."""
@@ -59,6 +59,7 @@ def clear_run_memos() -> None:
 
     clear_scratch_cache()
     graph._CENSUS_STATS.clear()
+    _NROWS_CACHE.clear()
 
 
 _NROWS_CACHE: dict[tuple, int | None] = {}

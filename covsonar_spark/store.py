@@ -32,6 +32,7 @@ from __future__ import annotations
 import contextlib
 import os
 import threading
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1094,11 +1095,14 @@ class SonarStore:
         if self._manifest_current_files(table):
             # manifest pinned to the CURRENT commit: its file column is
             # the complete live set (immutable dirs) — zero listing on
-            # the hot path; the raw manifest URIs feed the reader
+            # the hot path; the raw manifest URIs feed a schema-pinned
+            # reader (no inference job)
             files = [r["file"] for r in rows if norm_uri(r["file"]) in kept]
             if not files:
                 return self.table(table).limit(0)
-            return self._project(table, self.spark.read.parquet(*files))
+            return self._project(
+                table,
+                self.spark.read.schema(_SCHEMAS[table]).parquet(*files))
         actual = self._data_files(table)
         if not actual:
             # table dir absent or empty on disk (possibly mid-swap):
@@ -1158,26 +1162,18 @@ class SonarStore:
         version's dirs (vacuum defaults keep the last 2 versions and an
         age floor).  Raises ValueError for a version never committed or
         vacuumed past retention."""
-        dirs = self._log.snapshot(version).get(name, [])
-        if not dirs:
-            return self.spark.createDataFrame([], _SCHEMAS[name])
-        frames = [self.spark.read.parquet(d) for d in dirs]
-        df = frames[0]
-        for f in frames[1:]:
-            df = df.unionByName(f, allowMissingColumns=True)
-        return self._project(name, df)
+        return self._read_dirs(name, self._log.snapshot(version).get(name, []))
 
     def table(self, name: str) -> DataFrame:
         """The current table: resolve the live directory set from the
         newest commit (old-snapshot-or-new — a concurrent writer's
         staged dirs are invisible until its atomic commit rename
-        lands).  Dirs read separately + unioned: an adopted legacy dir
-        may carry the date_month partition column that log-written dirs
-        don't.  A log-less root falls back to the LEGACY plain-layout
-        read: the final dir, else a pre-unification crash artifact
-        (completed ``.tmp`` / ``.old`` snapshot), else empty — with the
-        strict-listing guard so a transient FS failure raises
-        StoreReadError instead of silently reporting 0 rows."""
+        lands) and read it through :meth:`_read_dirs`.  A log-less root
+        falls back to the LEGACY plain-layout read: the final dir, else
+        a pre-unification crash artifact (completed ``.tmp`` / ``.old``
+        snapshot), else empty — with the strict-listing guard so a
+        transient FS failure raises StoreReadError instead of silently
+        reporting 0 rows."""
         path = self._path(name)
         try:
             dirs = self._live_dirs(name)
@@ -1186,13 +1182,7 @@ class SonarStore:
                 f"commit log of {self.root} unreadable (filesystem "
                 f"error, NOT a confirmed-absent store): {exc}") from exc
         if dirs is not None:
-            if not dirs:
-                return self.spark.createDataFrame([], _SCHEMAS[name])
-            frames = [self.spark.read.parquet(d) for d in dirs]
-            df = frames[0]
-            for f in frames[1:]:
-                df = df.unionByName(f, allowMissingColumns=True)
-            return self._project(name, df)
+            return self._read_dirs(name, dirs)
         # legacy plain-directory layout (no commit yet)
         if not _remote_scheme(self.root):
             if os.path.isdir(path):
@@ -1246,6 +1236,52 @@ class SonarStore:
                     f"could not be read")
             return self.spark.createDataFrame([], _SCHEMAS[name])
 
+    def _read_dirs(self, name: str, dirs: list[str]) -> DataFrame:
+        """``name`` over one committed directory set: every log-written
+        ``_data/<name>/c-*`` dir in ONE schema-pinned scan — no
+        per-directory schema-inference job, and one FileScan instead of
+        a k-way Union.  Adopted legacy dirs (the plain ``root/<name>``
+        path, ``.tmp``/``.old`` crash artifacts) may carry the
+        ``date_month`` partition column or a pre-current schema, so they
+        keep their own inferring read, unioned onto the scan.
+
+        A pinned schema would read a committed dir whose data files
+        vanished as zero rows (inference used to fail on it), so every
+        logged dir must contribute a file to the scan's file index —
+        the listing Spark already did — or StoreReadError is raised."""
+        if not dirs:
+            return self.spark.createDataFrame([], _SCHEMAS[name])
+
+        def logged(d: str) -> bool:
+            parts = d.rstrip("/").rsplit("/", 3)
+            return parts[-3:-1] == ["_data", name] and \
+                parts[-1].startswith("c-")
+
+        frames = [self.spark.read.parquet(d)
+                  for d in dirs if not logged(d)]
+        scan_dirs = [d for d in dirs if logged(d)]
+        if scan_dirs:
+            scan = self.spark.read.schema(_SCHEMAS[name]) \
+                .parquet(*scan_dirs)
+            want = {norm_uri(hadoop_qualify(self.spark, d)
+                             if _remote_scheme(d) else d): d
+                    for d in scan_dirs}
+            # log dirs are flat (unpartitioned writes): a file's
+            # parent IS its committed dir
+            have = {norm_uri(f).rsplit("/", 1)[0]
+                    for f in scan.inputFiles()}
+            lost = sorted(d for u, d in want.items() if u not in have)
+            if lost:
+                raise StoreReadError(
+                    f"table '{name}': committed data dirs without data "
+                    f"files: {lost} (corruption, or vacuumed past this "
+                    f"reader's snapshot retention)")
+            frames.append(scan)
+        df = frames[0]
+        for f in frames[1:]:
+            df = df.unionByName(f, allowMissingColumns=True)
+        return self._project(name, df)
+
     @staticmethod
     def _dir_has_data(path: str) -> bool:
         """True if the directory tree holds any data file (anything not
@@ -1293,7 +1329,15 @@ class SonarStore:
         4. append/merge the five tables
         5. paranoid round-trip: restore every new genome from stored
            variants, byte-compare with the input (T15)
+
+        ``report["timings"]`` holds wall seconds per phase: ``validate``
+        (batch scan + the two conflict checks), ``derive`` (alignment +
+        variant derivation + error collect), ``appends`` (first append
+        start to last append end), ``paranoid`` and ``manifest``
+        (manifest refresh).  The paranoid check overlaps the appends.
         """
+        timings: dict[str, float] = {}
+        t0 = time.perf_counter()
         pre = records.select(
             F.col("accession"),
             F.col("description"),
@@ -1341,6 +1385,8 @@ class SonarStore:
                 f"sequence or description (use force=True to replace), "
                 f"e.g. {sample}")
 
+        t1 = time.perf_counter()
+        timings["validate"] = t1 - t0
         known_seqs = self.table("sequences").select("seqhash")
         new_seqs = (
             rec.select("seqhash", "sequence").dropDuplicates(["seqhash"])
@@ -1358,6 +1404,7 @@ class SonarStore:
         errors = profiled.where(F.col("error").isNotNull()) \
                          .select("seqhash", "error").collect()
         ok = profiled.where(F.col("error").isNull())
+        timings["derive"] = time.perf_counter() - t1
 
         bad_hashes = {r["seqhash"] for r in errors}
         from covsonar_spark.sources.metadata import UPPERCASED
@@ -1405,14 +1452,28 @@ class SonarStore:
             # and an O(table) ingest
             append_jobs["genomes"] = new_genomes.select(*gen_cols)
 
-        report = {"errors": {r["seqhash"]: r["error"] for r in errors}}
+        report = {"errors": {r["seqhash"]: r["error"] for r in errors},
+                  "timings": timings}
+        spans: dict[str, tuple[float, float]] = {}
+
+        def timed(key, fn):
+            # (start, end) of fn on the pool thread that runs it
+            def run(*args):
+                start = time.perf_counter()
+                try:
+                    return fn(*args)
+                finally:
+                    spans[key] = (start, time.perf_counter())
+            return run
+
         with _cf.ThreadPoolExecutor(max_workers=len(append_jobs) + 1) as pool:
             # pool threads are ENROLLED in the open mutation session:
             # the appends stage into it and the paranoid round-trip
             # reads the session view (the dna_variants rows staged a
             # moment earlier); un-enrolled threads on this handle keep
             # the committed snapshot
-            futs = {t: pool.submit(self._enrolled(self._append), t, df)
+            futs = {t: pool.submit(timed(t, self._enrolled(self._append)),
+                                   t, df)
                     for t, df in append_jobs.items()}
             paranoid_fut = None
             if paranoid:
@@ -1424,16 +1485,28 @@ class SonarStore:
                         ~F.col("seqhash").isin(list(bad_hashes)))
                 futs.pop("dna_variants").result()   # paranoid's input table
                 paranoid_fut = pool.submit(
-                    self._enrolled(paranoid_check), self, check)
+                    timed("paranoid", self._enrolled(paranoid_check)),
+                    self, check)
             # report counts run on the main thread against the cached
-            # `pre` while the appends stream in the background
+            # `pre` while the appends stream in the background: one
+            # aggregate for both batch counts
+            n = pre.agg(
+                F.count(F.lit(1)).alias("all"),
+                F.count(F.when(F.length("sequence") > 0, 1)).alias("rec"),
+            ).first()
             report.update(
-                added_accessions=rec.count(), new_sequences=ok.count(),
-                skipped_empty=pre.count() - rec.count())
+                added_accessions=n["rec"], new_sequences=ok.count(),
+                skipped_empty=n["all"] - n["rec"])
             for f in futs.values():
                 f.result()
+            app = [spans[t] for t in append_jobs]
+            timings["appends"] = max(e for _, e in app) - \
+                min(s for s, _ in app)
+            timings["paranoid"] = 0.0
             if paranoid_fut is not None:
                 mism = paranoid_fut.result()
+                timings["paranoid"] = spans["paranoid"][1] - \
+                    spans["paranoid"][0]
                 report["paranoid_mismatches"] = mism
                 if mism:
                     raise AssertionError(
@@ -1455,9 +1528,11 @@ class SonarStore:
         # to listing until the next optimize().  Absent manifests are
         # not created here — opting into manifests stays an
         # optimize()-time decision.
+        t2 = time.perf_counter()
         for t in ("profiles", "genomes"):
             if self._manifest(t) is not None:
                 report[f"manifest_files_{t}"] = self.build_manifest(t)
+        timings["manifest"] = time.perf_counter() - t2
         pre.unpersist()
         return report
 

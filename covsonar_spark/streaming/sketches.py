@@ -215,7 +215,9 @@ class StreamingCountMin(_LogStructuredSketch):
         return log.groupBy("i", "bucket").agg(F.sum("cnt").alias("cnt"))
 
     def estimates(self, keys: DataFrame) -> DataFrame:
-        """(key, cm_est) for the given distinct-key frame."""
+        """(key, [carried...], cm_est) for the given distinct-key
+        frame: extra columns of ``keys`` ride through (see
+        :func:`cm_estimate`)."""
         return cm_estimate(self._merged(), keys)
 
 

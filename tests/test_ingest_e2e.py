@@ -390,6 +390,38 @@ def test_empty_sequence_records_are_skipped(spark, tmp_path_factory):
     assert {r["accession"] for r in st.table("genomes").collect()} == {"good1"}
 
 
+def test_add_report_counts_and_phase_timings(spark, tmp_path):
+    """The add report carries its batch counts and non-negative wall
+    seconds for every ingest phase (synthetic one-CDS reference, so the
+    test needs no reference files)."""
+    import random
+
+    from covsonar_spark.functions.genetics import CDS
+
+    rng = random.Random(11)
+    codons = [a + b + c for a in "ACGT" for b in "ACGT" for c in "ACGT"
+              if a + b + c not in ("TAA", "TAG", "TGA")]
+    gene = "ATG" + "".join(rng.choice(codons) for _ in range(60)) + "TAA"
+
+    def flank():
+        return "".join(rng.choice("ACGT") for _ in range(60))
+    ref = flank() + gene + flank()
+    cds = [CDS("L1", "G1", [(60, 60 + len(gene))], [gene])]
+    snp = ref[:100] + ("A" if ref[100] != "A" else "C") + ref[101:]
+    st = SonarStore(spark, str(tmp_path / "db"), ref, cds)
+    recs = spark.createDataFrame(
+        [("wt", "wt", ref), ("snp", "snp", snp), ("snp", "snp", snp),
+         ("stub", "stub", "")],
+        "accession string, description string, sequence string")
+    rep = st.add_fasta_df(recs)
+    assert rep["paranoid_mismatches"] == [] and rep["errors"] == {}
+    assert (rep["added_accessions"], rep["new_sequences"],
+            rep["skipped_empty"]) == (2, 2, 1)
+    assert set(rep["timings"]) == {"validate", "derive", "appends",
+                                   "paranoid", "manifest"}
+    assert all(v >= 0 for v in rep["timings"].values()), rep["timings"]
+
+
 def test_description_change_conflicts_and_force_updates(spark, tmp_path_factory):
     """Same sequence + new description: error without force
     (reference sonar.py:595-600), description updated with force."""

@@ -43,3 +43,11 @@ def test_query_matches_oracle(spark, oracle, name):
     assert sorted(sdf.columns) == sorted(ocols)
     assert len(srows) == len(orows)
     assert canon(srows, sdf.columns) == canon(orows, ocols)
+
+
+def test_clear_run_memos_empties_nrows_cache():
+    from covsonar_spark import registry
+
+    registry._NROWS_CACHE[("x.parquet", ())] = 1
+    registry.clear_run_memos()
+    assert not registry._NROWS_CACHE

@@ -425,9 +425,10 @@ def test_time_travel_and_history(spark, tmp_path):
 
 
 def test_pushdown_survives_commitlog_union(spark, tmp_path):
-    """table() on a log store is a union of per-dir reads — Catalyst
-    must still push filters into EVERY member scan (a union that
-    blocked pushdown would silently full-scan 100 TB)."""
+    """table() on a log store scans every live dir — Catalyst must
+    still push filters into EVERY scan in the plan (a read that blocked
+    pushdown would silently full-scan 100 TB), and the scan must cover
+    all live dirs."""
     import re
 
     root = str(tmp_path / "db")
@@ -444,8 +445,113 @@ def test_pushdown_survives_commitlog_union(spark, tmp_path):
         .select("accession", "lineage")
     plan = df._jdf.queryExecution().executedPlan().toString()
     pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
-    assert len(pushed) >= 2                     # one per member scan
+    assert pushed
     assert all("EqualTo(lineage,L.2)" in p for p in pushed), pushed
+    scanned = {norm_uri(f).rsplit("/", 1)[0] for f in df.inputFiles()}
+    assert {norm_uri(d) for d in dirs} <= scanned
+
+
+def _frame(spark, name: str, k: int, n: int = 2):
+    """``n`` rows of table ``name`` that are distinct per commit ``k``."""
+    from pyspark.sql import types as T
+
+    def cell(f, i):
+        t = f.dataType
+        if isinstance(t, T.StringType):
+            return f"{f.name}-{k}-{i}"
+        if isinstance(t, (T.IntegerType, T.LongType)):
+            return 10 * k + i
+        if isinstance(t, T.DoubleType):
+            return float(k + i)
+        if isinstance(t, T.DateType):
+            return datetime.date(2021, 1 + k, 1 + i)
+        if isinstance(t, T.TimestampType):
+            return datetime.datetime(2021, 1 + k, 1 + i)
+        return [f"C{k}{i}T"]                    # array<string>
+    fields = _SCHEMAS[name].fields
+    return spark.createDataFrame(
+        [tuple(cell(f, i) for f in fields) for i in range(n)],
+        _SCHEMAS[name])
+
+
+def _multi_dir_store(spark, tmp_path, scheme: str, mount: str):
+    """Store with three commits, each appending one dir to every table."""
+    from covsonar_spark.store import TABLES
+
+    root = str(tmp_path / "db")
+    os.makedirs(root)
+    st = SonarStore(spark, _mount(spark, mount, root)
+                    if scheme == "viewfs" else root)
+    for k in range(3):
+        with st._mutation_session():
+            for name in TABLES:
+                st._append(name, _frame(spark, name, k))
+    return st, root
+
+
+def _jobs_during(spark, fn):
+    """(fn(), number of Spark jobs launched while fn ran)."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+
+    def last_job():
+        bus.waitUntilEmpty()
+        ids = sc.statusTracker().getJobIdsForGroup(None)
+        return max(ids) if ids else -1
+
+    before = last_job()
+    out = fn()
+    return out, last_job() - before
+
+
+@pytest.mark.parametrize("scheme", ["viewfs", "local"])
+def test_table_is_one_pinned_scan(spark, tmp_path, scheme):
+    """table() over k live dirs builds with zero Spark jobs (the schema
+    is pinned, never inferred per dir) into ONE parquet FileScan."""
+    from covsonar_spark.store import TABLES
+
+    st, _ = _multi_dir_store(spark, tmp_path, scheme, f"vtestscan{scheme}")
+    for name in TABLES:
+        assert len(st._live_dirs(name)) == 3
+        df, jobs = _jobs_during(spark, lambda: st.table(name))
+        assert jobs == 0, name
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("FileScan parquet") == 1, plan
+        assert df.count() == 6
+
+
+@pytest.mark.parametrize("scheme", ["viewfs", "local"])
+def test_dir_without_data_files_raises(spark, tmp_path, scheme):
+    """A committed dir whose part files vanished fails the read loudly
+    (StoreReadError) — a pinned schema must not turn it into a short
+    table."""
+    from covsonar_spark.store import StoreReadError
+
+    st, root = _multi_dir_store(spark, tmp_path, scheme, f"vtestlost{scheme}")
+    victim = st._live_dirs("dna_variants")[1].rsplit("/", 1)[1]
+    local = os.path.join(root, "_data", "dna_variants", victim)
+    parts = [f for f in os.listdir(local) if f.startswith("part-")]
+    assert parts
+    for f in parts:
+        os.remove(os.path.join(local, f))
+    with pytest.raises(StoreReadError, match=victim):
+        st.table("dna_variants")
+    with pytest.raises(StoreReadError, match=victim):
+        st.table_at("dna_variants", st._log.versions()[-1])
+    assert st.table("prot_variants").count() == 6
+
+
+@pytest.mark.parametrize("scheme", ["viewfs", "local"])
+def test_table_at_latest_equals_table(spark, tmp_path, scheme):
+    """table_at(latest version) and table() read the same rows."""
+    from covsonar_spark.store import TABLES
+
+    st, _ = _multi_dir_store(spark, tmp_path, scheme, f"vtestat{scheme}")
+    v = st._log.versions()[-1]
+    for name in TABLES:
+        got = sorted(map(tuple, st.table_at(name, v).collect()))
+        assert got == sorted(map(tuple, st.table(name).collect()))
+        assert len(got) == 6
 
 
 @pytest.mark.parametrize("scheme", ["viewfs", "local"])
