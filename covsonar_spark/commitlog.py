@@ -11,9 +11,10 @@ metadata log that needs only
   * ONE atomicity primitive: rename-without-replace of the commit file
     (Hadoop ``FileSystem.rename`` refuses an existing destination on
     HDFS/viewfs/local; posix gets the same put-if-absent from
-    ``os.link``; S3A users enable conditional-put semantics or front
-    the log with an HDFS/DynamoDB-style coordinator, the same
-    deployment requirement Delta-on-S3 has).
+    ``os.link``).  A raw object store without either plugs in through
+    ``CommitLog(fs=...)`` with an adapter over its own conditional
+    create; tests/test_logstore_contract.py is the contract it must
+    pass.
 
 Until round 6 this protocol ran only on remote-scheme roots while local
 posix roots kept a rename-pair swap with ``.old`` crash repair.  Round
@@ -82,10 +83,6 @@ LOG_DIR = "_log"
 LOCK_NAME = "LOCK"
 HINT_NAME = "_last"
 FLOOR_NAME = "_floor"
-# records which LogStore backend arbitrates this root's writes (written
-# at the first coordinator-backed open; absent on stock/legacy roots) —
-# see StoreBackendMismatch
-BACKEND_MARKER = ".backend"
 
 # a full snapshot ("checkpoint") commit is written at least every this
 # many commits; the ones between carry table DELTAS.  Bounds both the
@@ -120,17 +117,6 @@ def is_remote(path: str) -> bool:
     apply.  Single-letter schemes are Windows drive letters."""
     scheme = urlparse(path).scheme
     return len(scheme) > 1 and scheme != "file"
-
-
-class StoreBackendMismatch(RuntimeError):
-    """This writer's LogStore backend disagrees with the one recorded
-    in the root's ``_log/.backend`` marker.  Mutual exclusion is only
-    provided WITHIN a backend: a CAS-coordinator writer decides winners
-    in the coordinator table while a stock/condput writer decides on
-    the payload store itself, so one writer of each kind can both
-    'win' the same commit slot (or the lease lock) and silently lose a
-    commit.  All writers of a root must select the same backend
-    (SONAR_LOGSTORE); reads stay backend-agnostic."""
 
 
 class StoreWriteConflict(RuntimeError):
@@ -577,18 +563,22 @@ class HadoopFS:
 class CommitLog:
     """The versioned snapshot log of one store root.
 
-    ``fs`` is the pluggable LogStore seam (Delta's ``LogStore``
-    analogue): any object with the :class:`LocalFS` surface —
+    ``fs`` defaults to :class:`LocalFS` for local roots and
+    :class:`HadoopFS` for every other scheme.  Passing ``fs`` is the
+    LogStore seam (Delta's ``LogStore`` analogue) that tests and
+    raw-object-store adapters use: any object with the surface
     ``exists / mkdirs / delete / mtime / touch / write_bytes /
-    read_bytes / rename_no_replace / list_names``.  The ONE semantic
-    the protocol's correctness rests on: ``rename_no_replace`` must be
-    put-if-absent — of any set of concurrent callers targeting one
-    destination, at most one returns True and the destination ends up
-    with exactly that caller's complete payload.  It may return False
-    (definitively lost) or RAISE (outcome unknown — commit() then
+    write_bytes_atomic / read_bytes / rename_no_replace / list_names``
+    (``write_bytes_atomic`` publishes the ``_last`` hint tear-free; an
+    optional ``RENAME_PRESERVES_MTIME = False`` marks a rename that
+    stamps the copy time, see :meth:`acquire_lease`).  The ONE
+    semantic the protocol's correctness rests on: ``rename_no_replace``
+    must be put-if-absent — of any set of concurrent callers targeting
+    one destination, at most one returns True and the destination ends
+    up with exactly that caller's complete payload.  It may return
+    False (definitively lost) or RAISE (outcome unknown — commit() then
     decides by reading the slot back, see StoreCommitIndeterminate).
-    A DynamoDB/S3-conditional-put implementation must provide exactly
-    that; tests/test_logstore_contract.py is the executable contract."""
+    tests/test_logstore_contract.py is the executable contract."""
 
     def __init__(self, spark: SparkSession, root: str, fs=None):
         self.root = root.rstrip("/")
@@ -598,68 +588,6 @@ class CommitLog:
         else:
             self.fs = LocalFS() if not is_remote(root) \
                 else HadoopFS(spark, root)
-        self._backend_ok = False
-
-    def _check_backend_marker(self) -> None:
-        """Mixed-backend writer guard, once per handle before the first
-        mutation: a coordinator-arbitrated backend (cas) only provides
-        mutual exclusion when EVERY writer of the root goes through its
-        coordinator, so the first such open records a marker and any
-        later writer whose selected backend disagrees with a
-        cas-involving marker is refused.  condput-vs-stock is exempt:
-        both arbitrate on the payload store's own atomic create, so
-        they exclude each other correctly.  Reads never come here — the
-        log format is backend-agnostic."""
-        if self._backend_ok:
-            return
-        mine = getattr(self.fs, "BACKEND", "fs")
-        marker = f"{self.log_dir}/{BACKEND_MARKER}"
-
-        def _read_marker():
-            # broad catch: HadoopFS surfaces a missing file as a
-            # Py4JJavaError, not a Python FileNotFoundError
-            try:
-                return self.fs.read_bytes(marker).decode().strip()
-            except Exception:  # noqa: BLE001
-                return None
-
-        recorded = _read_marker()
-        if recorded is None and mine != "fs":
-            # first non-stock open of this root: record the backend
-            # through rename_no_replace — the one primitive that is
-            # atomic put-if-absent on EVERY backend (a plain
-            # overwrite=False write_bytes is exists-then-replace on
-            # LocalFS, so two racing first-openers could both record
-            # their own backend and both pass the guard).  On loss,
-            # read what the winner recorded.
-            tmp = f"{marker}.tmp-{uuid.uuid4().hex[:8]}"
-            try:
-                self.fs.write_bytes(tmp, mine.encode(), overwrite=True)
-                if not self.fs.rename_no_replace(tmp, marker):
-                    self.fs.delete(tmp, recursive=False)
-            except Exception:  # noqa: BLE001 — RO fs / lost outcome
-                pass
-            # ALWAYS re-read after publishing: rename_no_replace
-            # arbitrates within ONE backend's domain (coordinator for
-            # cas, payload store for condput/stock), so two
-            # first-openers of DIFFERENT backends racing a fresh root
-            # don't exclude each other — the re-read makes whoever's
-            # marker actually survived the winner, and the other
-            # opener sees the foreign value and refuses below.  A
-            # clobber landing after this read is the irreducible
-            # cross-domain window; any later handle of the losing
-            # backend still refuses at its own first mutation.
-            recorded = _read_marker()
-        if (recorded is not None and recorded != mine
-                and "cas" in (recorded, mine)):
-            raise StoreBackendMismatch(
-                f"store root {self.root} is arbitrated by LogStore "
-                f"backend '{recorded}' (recorded in {marker}) but this "
-                f"writer selected '{mine}'. Mixed-backend writers can "
-                "both win one commit slot and silently lose a commit — "
-                "set SONAR_LOGSTORE so every writer of this root uses "
-                "the same backend (covsonar_spark/logstore.py).")
-        self._backend_ok = True
 
     # -- read side ----------------------------------------------------
 
@@ -953,7 +881,6 @@ class CommitLog:
             body["tables"] = tables
         raw = json.dumps(body, indent=1).encode()
         self.fs.mkdirs(self.log_dir)
-        self._check_backend_marker()
         tmp = f"{self._commit_path(new_v)}.tmp-{uuid.uuid4().hex[:8]}"
         self.fs.write_bytes(tmp, raw, overwrite=True)
         try:
@@ -990,7 +917,7 @@ class CommitLog:
             # best-effort hint refresh: readers heal a stale hint by
             # probing forward, so a crash here (or two winners writing
             # out of order) costs extra reads, never correctness
-            self._write_marker(
+            self.fs.write_bytes_atomic(
                 f"{self.log_dir}/{HINT_NAME}",
                 json.dumps({"version": new_v, "id": cid,
                             "checkpoint": checkpoint,
@@ -998,20 +925,6 @@ class CommitLog:
         except Exception:  # noqa: BLE001
             pass
         return new_v
-
-    def _write_marker(self, path: str, data: bytes) -> None:
-        """Publish the ``_last`` HINT tear-free where the backend
-        supports it; plain overwrite on injected backends without the
-        helper.  Hint readers tolerate both torn and absent markers
-        (they fall back to listing).  The FLOOR marker deliberately
-        does NOT use this: its rewrite must never pass through an
-        absent state (absence reads as "no floor"), so it is written
-        in place and a torn read fails CLOSED in data_floor()."""
-        writer = getattr(self.fs, "write_bytes_atomic", None)
-        if writer is not None:
-            writer(path, data)
-        else:
-            self.fs.write_bytes(path, data, overwrite=True)
 
     @staticmethod
     def _diff(base: dict, tables: dict) -> dict:
@@ -1060,7 +973,6 @@ class CommitLog:
         lock = f"{self.log_dir}/{LOCK_NAME}"
         breaking = f"{lock}.breaking"
         self.fs.mkdirs(self.log_dir)
-        self._check_backend_marker()
         deadline = time.time() + timeout
         # long waits (vacuum defaults to outlasting the staleness
         # threshold) are silent otherwise — surface WHY we're waiting
@@ -1075,8 +987,7 @@ class CommitLog:
             # deadline check at the TOP: every `continue` below (lock
             # released/unreadable between probes) used to skip the
             # bottom-of-loop check, so a lock that repeatedly failed to
-            # read (possible when a backend's claim outlives its
-            # object) spun forever instead of raising
+            # read spun forever instead of raising
             if time.time() > deadline:
                 held = f"held {age:.0f}s; " if age is not None else ""
                 raise TimeoutError(
@@ -1142,8 +1053,8 @@ class CommitLog:
                             # displaced even when its owner record is
                             # unreadable.  Only meaningful on backends
                             # whose rename carries the source mtime
-                            # (hardlink/rename); the copy-based
-                            # conditional-put backends stamp the copy
+                            # (hardlink/rename); copy-based renames
+                            # (HadoopFS on s3a/gs/abfs) stamp the copy
                             # time, which ALWAYS reads fresh — trusting
                             # it restored every displaced stale lock
                             # and made a dead holder's lease
@@ -1359,10 +1270,10 @@ class CommitLog:
             # mkdir-mutex dirs leaked by a holder (or breaker) that
             # died mid-critical-section on a hardlink-less mount;
             # .lnkprobe- : probe files leaked between create and
-            # unlink; .cp- : LocalCondPutStore put-if-absent staging
-            # leaked by a crash between write and unlink.  All honor
-            # the min-age floor so a LIVE gate/claim/probe is never
-            # deleted.
+            # unlink; .cp- : conditional-put staging that roots written
+            # by earlier builds may hold, leaked by a crash between
+            # write and unlink.  All honor the min-age floor so a LIVE
+            # gate/claim/probe is never deleted.
             if (".tmp-" in name or ".wr-" in name
                     or ".gate" in name or ".cp-" in name
                     or name.startswith(".lnkprobe-")):

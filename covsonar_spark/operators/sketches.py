@@ -361,8 +361,19 @@ def cm_estimate(cells: DataFrame, keys: DataFrame) -> DataFrame:
     scan + join-back just to re-attach those columns (the DuckDB twin
     always carried exact_count through its probe CTE this way; every
     probe row inner-matches a cell because the key's own occurrences
-    put a count in every counter it hashes to)."""
+    put a count in every counter it hashes to).
+
+    Row-multiplication hazard: an extra column that is NOT determined
+    by key yields one output row per distinct (key, extra) combo.  An
+    extra column named ``i``, ``bucket`` or ``cnt`` collides with the
+    probe's own columns (overwritten, or joined on) and raises
+    ``ValueError``."""
     extra = [c for c in keys.columns if c != "key"]
+    clash = sorted({"i", "bucket", "cnt"} & set(extra))
+    if clash:
+        raise ValueError(
+            f"cm_estimate: keys columns {clash} collide with the probe's "
+            "(i, bucket, cnt) columns; rename them")
     rows = F.array(*[F.lit(i) for i in range(CM_D)])
     probes = (
         keys.withColumn("i", F.explode(rows))

@@ -261,39 +261,10 @@ class SonarStore:
         self.sublineage_map = sublineage_map or {}
         # every root — local posix or remote scheme — mutates through
         # the same commit log (round 7 unification: one protocol, and
-        # local stores get history/time travel too).  SONAR_LOGSTORE=cas
-        # swaps in the coordinator-arbitrated backend (logstore.py — the
-        # S3+DynamoDB deployment shape on local parts): same protocol,
-        # conditional puts decided by a CAS table instead of hardlink/
-        # mkdir atomicity.  Env-selected so the cross-process stress
-        # (tools/stress_store_procs.py) runs unmodified over it.
+        # local stores get history/time travel too)
         from covsonar_spark.commitlog import CommitLog
 
-        fs = None
-        backend = os.environ.get("SONAR_LOGSTORE")
-        from covsonar_spark.logstore import KNOWN_BACKENDS
-        if backend in KNOWN_BACKENDS and _remote_scheme(self.root):
-            # remote object storage is exactly the deployment these
-            # backends exist for, but the local compositions wrap
-            # posix payload stores — silently falling through to
-            # HadoopFS rename semantics would leave an operator
-            # believing a coordinator is arbitrating when none is
-            import warnings
-            warnings.warn(
-                f"SONAR_LOGSTORE={backend} has no local composition"
-                f" for remote root {self.root}; falling back to the"
-                " Hadoop filesystem backend. Wire the production"
-                " adapters at the LogStore seam instead (a DynamoDB"
-                "-style coordinator for 'cas', a conditional-PUT"
-                " client for 'condput' — covsonar_spark/logstore.py"
-                " documents both shapes).",
-                RuntimeWarning, stacklevel=2)
-        elif backend:
-            # env_logstore selects the backend — and RAISES on an
-            # unknown value rather than silently running stock
-            from covsonar_spark.logstore import env_logstore
-            fs = env_logstore(self.root)
-        self._log = CommitLog(spark, self.root, fs=fs)
+        self._log = CommitLog(spark, self.root)
         # mutation-session state: staged dir lists per table, applied
         # over the base snapshot at commit time; the lock serializes
         # staging from ingest's concurrent append threads

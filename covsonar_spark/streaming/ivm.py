@@ -494,60 +494,51 @@ class StreamingJoinView:
         tmp_dir = os.path.join(self._dim_path, f"_tmp_{tag}")
         shutil.rmtree(tmp_dir, ignore_errors=True)
 
-        def _stage_and_swap() -> None:
-            delta_dim.write.mode("overwrite").parquet(tmp_dir)
-            open(os.path.join(tmp_dir, f"_tag_{tag}"), "w").close()
-            trash = os.path.join(self._dim_path, f"_trash_gen{new_gen}")
-            # the two renames and the trash cleanup run under the swap
-            # lock, so a concurrent process_batch heal scan (streaming
-            # thread) can never observe — and "repair" — the mid-swap
-            # state
-            with self._swap_lock:
-                # a tag-replay rewrite swaps an EXISTING gen dir that a
-                # running batch's persisted dim frame may span, and the
-                # invalidation below unpersists frames a running join
-                # may be consuming — drain in-flight batches first
-                # (ADVICE r9: eager unpersist widened the
-                # recompute-after-swap race to the whole batch window)
-                self._drain_inflight()
-                shutil.rmtree(trash, ignore_errors=True)
-                if os.path.isdir(gen_dir):
-                    os.rename(gen_dir, trash)
-                os.rename(tmp_dir, gen_dir)
-                shutil.rmtree(trash, ignore_errors=True)
-                # cached frames may span the swapped generation dir
-                self._invalidate_dim_cache()
-
-        def _join_old_fact() -> None:
-            # ΔV = A_old ⋈ ΔB: reads the in-memory delta frame, the
-            # fact log dirs, and the view dir names (_pinned_gens) —
-            # none of which the generation swap touches, so the two
-            # jobs are independent and overlap on the scheduler
-            # (guide §2.6; the same driver-thread pattern as
-            # process_batch's two sink writes).  Crash anatomy is
-            # unchanged in either order: a replayed tag rewrites both
-            # the generation dir and the ΔV dir idempotently.
-            if not os.path.isdir(self._fact_path):
-                return
-            pinned = self._pinned_gens()
-            old_batches = [
-                e.split("=", 1)[1] for e in os.listdir(self._fact_path)
-                if e.startswith("batch=")
-                and pinned.get(e.split("=", 1)[1], -1) < new_gen]
-            if old_batches:
-                fact = self.spark.read.parquet(
-                    *[os.path.join(self._fact_path, f"batch={b}")
-                      for b in old_batches])
-                (fact.join(delta_dim, self.on)
-                 .write.mode("overwrite")
-                 .parquet(os.path.join(self._view_path, f"batch=dim_{tag}")))
-
-        import concurrent.futures as _cf
-
-        with _cf.ThreadPoolExecutor(max_workers=2) as pool:
-            futs = [pool.submit(_stage_and_swap), pool.submit(_join_old_fact)]
-            for f in futs:
-                f.result()
+        delta_dim.write.mode("overwrite").parquet(tmp_dir)
+        open(os.path.join(tmp_dir, f"_tag_{tag}"), "w").close()
+        trash = os.path.join(self._dim_path, f"_trash_gen{new_gen}")
+        # the two renames and the trash cleanup run under the swap
+        # lock, so a concurrent process_batch heal scan (streaming
+        # thread) can never observe — and "repair" — the mid-swap
+        # state
+        with self._swap_lock:
+            # a tag-replay rewrite swaps an EXISTING gen dir that a
+            # running batch's persisted dim frame may span, and the
+            # invalidation below unpersists frames a running join
+            # may be consuming — drain in-flight batches first
+            # (ADVICE r9: eager unpersist widened the
+            # recompute-after-swap race to the whole batch window)
+            self._drain_inflight()
+            # list A_old drained and locked: every batch pinned to an
+            # older generation has finished writing its fact dir (a
+            # listing before the drain could leave such a batch out of
+            # ΔV for good), and no batch pinned to new_gen can start
+            # until the lock drops.  A staging failure above raised before
+            # any batch=dim_<tag> exists for a generation that never
+            # swapped in.
+            old_batches = []
+            if os.path.isdir(self._fact_path):
+                pinned = self._pinned_gens()
+                old_batches = [
+                    e.split("=", 1)[1] for e in os.listdir(self._fact_path)
+                    if e.startswith("batch=")
+                    and pinned.get(e.split("=", 1)[1], -1) < new_gen]
+            shutil.rmtree(trash, ignore_errors=True)
+            if os.path.isdir(gen_dir):
+                os.rename(gen_dir, trash)
+            os.rename(tmp_dir, gen_dir)
+            shutil.rmtree(trash, ignore_errors=True)
+            # cached frames may span the swapped generation dir
+            self._invalidate_dim_cache()
+        # ΔV = A_old ⋈ ΔB; a replayed tag rewrites both the generation
+        # dir and the ΔV dir idempotently
+        if old_batches:
+            fact = self.spark.read.parquet(
+                *[os.path.join(self._fact_path, f"batch={b}")
+                  for b in old_batches])
+            (fact.join(delta_dim, self.on)
+             .write.mode("overwrite")
+             .parquet(os.path.join(self._view_path, f"batch=dim_{tag}")))
 
     def view(self) -> DataFrame:
         """The maintained join view: the compacted segments plus the

@@ -1,7 +1,9 @@
 """Executable contract for the pluggable LogStore seam
-(CommitLog(fs=...)) — what a raw-object-store backend (S3 +
-conditional PUT / DynamoDB coordinator, Delta's LogStore analogue)
-must provide, proven against an adversarial in-memory fake:
+(CommitLog(fs=...)) — what any backend (Delta's LogStore analogue: a
+raw-object-store adapter over a conditional PUT must pass it too)
+must provide.  The generic tests run on an adversarial in-memory fake
+AND on the production posix backend (a real LocalFS, os.link
+put-if-absent):
 
   * ``rename_no_replace`` is put-if-absent: of any set of concurrent
     callers for one destination, at most one returns True and the
@@ -14,10 +16,9 @@ must provide, proven against an adversarial in-memory fake:
     after which the mutation session must NOT delete its staged dirs
     (a published snapshot may reference them).
 
-The fake's plain ``rename`` semantics are deliberately NON-atomic
-(copy-then-delete with a visible intermediate state, like raw S3
-"rename") — the protocol never relies on plain rename, only on the
-conditional-put primitive above.
+The fake has no plain ``rename`` at all, like raw S3 — the protocol
+never relies on plain rename, only on the conditional-put primitive
+above.
 """
 from __future__ import annotations
 
@@ -27,7 +28,8 @@ import time
 
 import pytest
 
-from covsonar_spark.commitlog import (CommitLog, StoreCommitIndeterminate,
+from covsonar_spark.commitlog import (CommitLog, LocalFS,
+                                      StoreCommitIndeterminate,
                                       StoreWriteConflict)
 
 
@@ -39,12 +41,15 @@ class MemObjectFS:
       * "lost_call" — the call raises and nothing lands
     """
 
+    # the conditional put stamps the publish time, like a copy-based
+    # object-store rename — the lease break must not trust it
+    RENAME_PRESERVES_MTIME = False
+
     def __init__(self):
         self._lock = threading.RLock()
         self._obj: dict[str, bytes] = {}
         self._mtime: dict[str, float] = {}
         self.fail: list[str] = []
-        self.renames = 0
 
     # -- surface -----------------------------------------------------
     def exists(self, path):
@@ -83,6 +88,8 @@ class MemObjectFS:
             self._obj[path] = bytes(data)
             self._mtime[path] = time.time()
 
+    write_bytes_atomic = write_bytes     # one locked dict store
+
     def read_bytes(self, path):
         with self._lock:
             if path not in self._obj:
@@ -91,7 +98,6 @@ class MemObjectFS:
 
     def rename_no_replace(self, src, dst):
         with self._lock:
-            self.renames += 1
             mode = self.fail.pop(0) if self.fail else None
             if mode == "lost_call":
                 raise TimeoutError("injected: PUT lost before landing")
@@ -112,53 +118,47 @@ class MemObjectFS:
             return sorted({k[len(pre):].split("/")[0]
                            for k in self._obj if k.startswith(pre)})
 
-    def put_if_absent(self, path, data):
-        """Atomic conditional create (S3 ``If-None-Match: *``) — the
-        primitive the claim-free CondPutObjectFS shape builds on."""
-        with self._lock:
-            if path in self._obj:
-                return False
-            self._obj[path] = bytes(data)
-            self._mtime[path] = time.time()
-            return True
+
+class FailingLocalFS(LocalFS):
+    """The production posix backend with the fake's ``fail`` hooks
+    around its real put-if-absent (os.link)."""
+
+    def __init__(self):
+        super().__init__()
+        self.fail: list[str] = []
+
+    def rename_no_replace(self, src, dst):
+        mode = self.fail.pop(0) if self.fail else None
+        if mode == "lost_call":
+            raise TimeoutError("injected: call lost before landing")
+        won = super().rename_no_replace(src, dst)
+        if mode == "lost_ack" and won:
+            raise TimeoutError("injected: publish landed, ack lost")
+        return won
 
 
-@pytest.fixture(params=["mem", "cas", "condput"])
-def make_fs(request, tmp_path):
-    """Factory for the LogStore under test: the adversarial in-memory
-    fake, the coordinator-arbitrated conditional-put backend
-    (logstore.CasObjectFS — SQLite CAS coordinator over the same fake
-    as its payload store, so the payload layer stays an object store
-    with NO atomic rename), or the claim-free conditional-put backend
-    (logstore.CondPutObjectFS — the payload store's own atomic
-    put-if-absent arbitrates).  All expose the same ``fail`` injection
-    hooks."""
-
-    def factory():
-        mem = MemObjectFS()
-        if request.param == "mem":
-            return mem
-        if request.param == "condput":
-            from covsonar_spark.logstore import CondPutObjectFS
-            return CondPutObjectFS(mem)
-        from covsonar_spark.logstore import CasObjectFS, SQLiteCoordinator
-        return CasObjectFS(
-            mem, SQLiteCoordinator(str(tmp_path / "cas.sqlite")))
-
-    return factory
+@pytest.fixture(params=["mem", "local"])
+def backend(request, tmp_path):
+    """(fs, log) for the LogStore under test: the adversarial in-memory
+    fake, or a real LocalFS rooted under tmp_path.  Both expose the
+    same ``fail`` injection hooks."""
+    if request.param == "mem":
+        fs = MemObjectFS()
+        return fs, _mklog(fs)
+    fs = FailingLocalFS()
+    return fs, CommitLog(None, str(tmp_path / "store"), fs=fs)
 
 
 def _mklog(fs) -> CommitLog:
     return CommitLog(None, "mem://store", fs=fs)
 
 
-def test_concurrent_committers_exactly_one_winner(make_fs):
+def test_concurrent_committers_exactly_one_winner(backend):
     """8 threads race commit() of the same version: one returns, the
     rest raise StoreWriteConflict, the published commit is one
     complete loser-free body, and no loser's commit id ever appears
     in the log (the manifest-pinning invariant)."""
-    fs = make_fs()
-    log = _mklog(fs)
+    _fs, log = backend
     base = log.commit(0, {"t": ["d0"]})
     wins, losses = [], []
     barrier = threading.Barrier(8)
@@ -185,12 +185,11 @@ def test_concurrent_committers_exactly_one_winner(make_fs):
     assert not ({f"cid-{i}" for i in losses} & published)
 
 
-def test_lost_ack_self_heals_to_win(make_fs):
+def test_lost_ack_self_heals_to_win(backend):
     """The conditional put lands but the ack is lost: commit() reads
     the slot back, finds its own id, and reports the commit as WON —
     not a conflict, not an exception."""
-    fs = make_fs()
-    log = _mklog(fs)
+    fs, log = backend
     v = log.commit(0, {"t": ["a"]})
     fs.fail = ["lost_ack"]
     v2 = log.commit(v, {"t": ["a", "b"]}, commit_id="mine")
@@ -199,12 +198,11 @@ def test_lost_ack_self_heals_to_win(make_fs):
     assert log.latest()[1] == {"t": ["a", "b"]}
 
 
-def test_lost_call_after_racing_winner_is_conflict(make_fs):
+def test_lost_call_after_racing_winner_is_conflict(backend):
     """The call raises without landing AND another writer had already
     taken the version: the read-back finds the OTHER id → clean
     StoreWriteConflict, exactly as a plain False."""
-    fs = make_fs()
-    log = _mklog(fs)
+    fs, log = backend
     v = log.commit(0, {"t": ["a"]})
     log.commit(v, {"t": ["a", "x"]}, commit_id="winner")   # slot taken
     fs.fail = ["lost_call"]
@@ -213,13 +211,12 @@ def test_lost_call_after_racing_winner_is_conflict(make_fs):
     assert log.latest()[2] == "winner"
 
 
-def test_lost_call_empty_slot_is_indeterminate(make_fs):
+def test_lost_call_empty_slot_is_indeterminate(backend):
     """The call raises, nothing landed, the slot stays unreadable:
     commit() raises StoreCommitIndeterminate (NOT conflict) so the
     session keeps its staged dirs for vacuum instead of deleting data
     a still-in-flight publish might reference."""
-    fs = make_fs()
-    log = _mklog(fs)
+    fs, log = backend
     v = log.commit(0, {"t": ["a"]})
     fs.fail = ["lost_call"]
     t0 = time.time()
@@ -270,13 +267,12 @@ def test_session_keeps_staged_dirs_on_indeterminate(spark, tmp_path):
     st._log.commit = real_commit
 
 
-def test_full_protocol_runs_on_the_fake(make_fs):
+def test_full_protocol_runs_on_the_fake(backend):
     """The whole read/write surface — chained delta commits,
     checkpoint cadence, O(1) hinted latest(), time-travel resolve,
-    vacuum retention — works against the object-store fake, not just
-    posix."""
-    fs = make_fs()
-    log = _mklog(fs)
+    vacuum retention — works against the object-store fake as well as
+    on posix."""
+    _fs, log = backend
     snap = None
     model = {}
     hist = {}
@@ -297,160 +293,6 @@ def test_full_protocol_runs_on_the_fake(make_fs):
     log.vacuum({}, retain_last=2, min_age_s=0.0)
     assert log.versions()[0] == 21          # v22's checkpoint chain
     assert log.resolve(22)["tables"] == hist[22]
-
-
-# -- CAS-backend-specific windows (covsonar_spark/logstore.py) -------------
-
-def _mkcas(tmp_path, mem=None):
-    from covsonar_spark.logstore import CasObjectFS, SQLiteCoordinator
-    mem = mem or MemObjectFS()
-    coord = SQLiteCoordinator(str(tmp_path / "cas.sqlite"))
-    return mem, coord, CasObjectFS(mem, coord)
-
-
-def test_cas_crash_after_claim_self_heals_to_win(tmp_path):
-    """The coordinator-shape-specific crash window: the writer dies
-    AFTER winning the CAS claim but BEFORE its payload lands.  The
-    claim records the source, so commit()'s read-back reconciles the
-    copy itself and reports the commit as WON."""
-    _, _, fs = _mkcas(tmp_path)
-    log = _mklog(fs)
-    v = log.commit(0, {"t": ["a"]})
-    fs.fail = ["crash_after_claim"]
-    v2 = log.commit(v, {"t": ["a", "b"]}, commit_id="mine")
-    assert v2 == v + 1
-    assert log.resolve(v2)["id"] == "mine"
-    assert log.latest()[1] == {"t": ["a", "b"]}
-
-
-def test_cas_crashed_claim_healed_by_any_observer(tmp_path):
-    """A claim left incomplete by a crashed publisher is completed by
-    whichever OTHER party touches the slot first — a lister, a reader,
-    an exists() probe, or a losing renamer — through a fresh backend
-    instance (a different process in production)."""
-    mem, coord, fs = _mkcas(tmp_path)
-    fs.write_bytes("mem://s/dir/src1", b"payload-1")
-    fs.fail = ["crash_after_claim"]
-    with pytest.raises(TimeoutError):
-        fs.rename_no_replace("mem://s/dir/src1", "mem://s/dir/final")
-    assert not mem.exists("mem://s/dir/final")      # copy never landed
-    from covsonar_spark.logstore import CasObjectFS
-    other = CasObjectFS(mem, coord)                 # fresh observer
-    assert "final" in other.list_names("mem://s/dir")
-    assert other.read_bytes("mem://s/dir/final") == b"payload-1"
-    assert mem.exists("mem://s/dir/final")          # healed in the store
-    # and a loser racing the healed slot reports a clean False
-    other.write_bytes("mem://s/dir/src2", b"payload-2")
-    assert other.rename_no_replace("mem://s/dir/src2",
-                                   "mem://s/dir/final") is False
-    assert other.read_bytes("mem://s/dir/final") == b"payload-1"
-
-
-def test_cas_delete_releases_claim(tmp_path):
-    """delete() must release the CAS claim, or re-claimable slots (the
-    writer lease lock, the gate rendezvous) lock their name forever."""
-    _, _, fs = _mkcas(tmp_path)
-    for round_ in range(3):
-        fs.write_bytes("mem://s/tmp", f"gen-{round_}".encode())
-        assert fs.rename_no_replace("mem://s/tmp", "mem://s/LOCK") is True
-        assert fs.read_bytes("mem://s/LOCK") == f"gen-{round_}".encode()
-        fs.delete("mem://s/LOCK", recursive=False)
-
-
-def test_cas_cross_instance_single_winner(tmp_path):
-    """Two backend instances over the same coordinator db (two
-    processes in production): exactly one claim wins."""
-    mem, coord, a = _mkcas(tmp_path)
-    from covsonar_spark.logstore import CasObjectFS
-    b = CasObjectFS(mem, coord)
-    a.write_bytes("mem://s/ta", b"A")
-    b.write_bytes("mem://s/tb", b"B")
-    ra = a.rename_no_replace("mem://s/ta", "mem://s/v1.json")
-    rb = b.rename_no_replace("mem://s/tb", "mem://s/v1.json")
-    assert (ra, rb) in ((True, False), (False, True))
-    assert a.read_bytes("mem://s/v1.json") == (b"A" if ra else b"B")
-
-
-def test_cas_never_uses_payload_store_rename(tmp_path):
-    """The whole point of the backend: it must work on a payload store
-    with NO atomic-rename primitive at all.  Run a multi-commit
-    protocol exchange and assert the payload store's own
-    rename_no_replace was never consulted."""
-    mem, _, fs = _mkcas(tmp_path)
-    log = _mklog(fs)
-    snap = None
-    for i in range(12):
-        snap = log.latest()
-        base = dict(snap[1]) if snap else {}
-        tables = {**{t: list(d) for t, d in base.items()},
-                  "t": base.get("t", []) + [f"d{i}"]}
-        log.commit(snap[0] if snap else 0, tables,
-                   base_tables=base if snap else None,
-                   base_checkpoint=(getattr(snap, "checkpoint", None)
-                                    if snap else None))
-    assert log.latest()[0] == 12
-    log.vacuum({}, retain_last=2, min_age_s=0.0)
-    assert mem.renames == 0
-
-
-def test_cas_gc_of_claim_source_heals_not_bricks(tmp_path):
-    """Vacuum GC'ing an aged tmp file that is the SOURCE of an
-    incomplete claim must publish the slot first: with the source
-    blindly deleted, the claimed version would be forever unreadable
-    (read-back: Indeterminate) AND unclaimable (CAS taken) — a bricked
-    log.  delete() therefore completes the publish before removing the
-    source (GC doubles as the healer)."""
-    mem, coord, fs = _mkcas(tmp_path)
-    fs.write_bytes("mem://s/_log/v5.json.tmp-abc", b'{"id": "w1"}')
-    fs.fail = ["crash_after_claim"]
-    with pytest.raises(TimeoutError):
-        fs.rename_no_replace("mem://s/_log/v5.json.tmp-abc",
-                             "mem://s/_log/v5.json")
-    assert not mem.exists("mem://s/_log/v5.json")
-    # vacuum-style GC of the aged tmp
-    fs.delete("mem://s/_log/v5.json.tmp-abc", recursive=False)
-    assert fs.read_bytes("mem://s/_log/v5.json") == b'{"id": "w1"}'
-    # and the slot still refuses new claimants
-    fs.write_bytes("mem://s/_log/v5.json.tmp-zzz", b'{"id": "w2"}')
-    assert fs.rename_no_replace("mem://s/_log/v5.json.tmp-zzz",
-                                "mem://s/_log/v5.json") is False
-
-
-def test_cas_orphaned_complete_claim_is_reclaimable(tmp_path):
-    """An out-of-band delete of a published object (an operator rm of
-    the lease lock file, not through the fs seam) leaves a COMPLETE
-    claim with no object.  LocalFS semantics for that state are 'slot
-    free' — the CAS backend must match: the next renamer takes the
-    slot over (atomic reclaim), while concurrent reclaimers still get
-    exactly one winner."""
-    mem, coord, fs = _mkcas(tmp_path)
-    fs.write_bytes("mem://s/_log/LOCK.tmp-1", b"owner-1")
-    assert fs.rename_no_replace("mem://s/_log/LOCK.tmp-1",
-                                "mem://s/_log/LOCK") is True
-    # out-of-band removal: straight through the payload store
-    mem.delete("mem://s/_log/LOCK", recursive=False)
-    # concurrent re-acquirers race the orphan: exactly one wins
-    results = []
-    lock = threading.Lock()
-
-    def taker(i):
-        fs2 = __import__("covsonar_spark.logstore",
-                         fromlist=["CasObjectFS"]).CasObjectFS(mem, coord)
-        src = f"mem://s/_log/LOCK.tmp-{i + 2}"
-        fs2.write_bytes(src, f"owner-{i + 2}".encode())
-        ok = fs2.rename_no_replace(src, "mem://s/_log/LOCK")
-        with lock:
-            results.append((i, ok))
-
-    ts = [threading.Thread(target=taker, args=(i,)) for i in range(6)]
-    for t in ts:
-        t.start()
-    for t in ts:
-        t.join()
-    winners = [i for i, ok in results if ok]
-    assert len(winners) == 1, results
-    assert (fs.read_bytes("mem://s/_log/LOCK")
-            == f"owner-{winners[0] + 2}".encode())
 
 
 def test_lease_acquire_times_out_even_when_lock_unreadable(tmp_path):
@@ -478,528 +320,22 @@ def test_lease_acquire_times_out_even_when_lock_unreadable(tmp_path):
     log.release_lease(o)
 
 
-def test_cas_delete_does_not_erase_concurrent_reclaim(tmp_path):
-    """The delete-vs-reclaim window (review finding): delete() removes
-    the object, a concurrent renamer legitimately reclaims the
-    now-orphaned slot, and delete()'s release then ran LAST.  The
-    release is conditioned on the claim identity observed BEFORE the
-    object deletion, so the reclaimer's fresh claim must survive — an
-    unconditioned forget erased it and let a third caller also win."""
-    mem, coord, fs = _mkcas(tmp_path)
-    fs.write_bytes("mem://s/_log/LOCK.tmp-a", b"A")
-    assert fs.rename_no_replace("mem://s/_log/LOCK.tmp-a",
-                                "mem://s/_log/LOCK") is True
-
-    # interleave: A's delete() with B's reclaim landing between the
-    # object removal and the claim release
-    real_base_delete = mem.delete
-    fsB = __import__("covsonar_spark.logstore",
-                     fromlist=["CasObjectFS"]).CasObjectFS(mem, coord)
-
-    state = {"done": False}
-
-    def delete_then_reclaim(path, recursive=True):
-        got = real_base_delete(path, recursive=recursive)
-        if path == "mem://s/_log/LOCK" and not state["done"]:
-            state["done"] = True
-            fsB.write_bytes("mem://s/_log/LOCK.tmp-b", b"B")
-            assert fsB.rename_no_replace("mem://s/_log/LOCK.tmp-b",
-                                         "mem://s/_log/LOCK") is True
-        return got
-
-    mem.delete = delete_then_reclaim
-    try:
-        fs.delete("mem://s/_log/LOCK", recursive=False)
-    finally:
-        mem.delete = real_base_delete
-    # B's claim and payload must have survived A's release...
-    assert fs.read_bytes("mem://s/_log/LOCK") == b"B"
-    # ...so a third caller LOSES instead of double-winning
-    fs.write_bytes("mem://s/_log/LOCK.tmp-c", b"C")
-    assert fs.rename_no_replace("mem://s/_log/LOCK.tmp-c",
-                                "mem://s/_log/LOCK") is False
-    assert fs.read_bytes("mem://s/_log/LOCK") == b"B"
-
-
-def test_cas_like_metacharacters_do_not_overmatch(tmp_path):
-    """Coordinator prefix queries escape LIKE metacharacters: every
-    store path contains ``_log``, so an unescaped ``_`` would make a
-    recursive release under ``.../_log`` also drop claims guarding a
-    sibling ``Xlog`` tree (review finding)."""
-    mem, coord, fs = _mkcas(tmp_path)
-    fs.write_bytes("mem://s/Xlog/t1", b"sib")
-    assert fs.rename_no_replace("mem://s/Xlog/t1",
-                                "mem://s/Xlog/v1.json") is True
-    fs.write_bytes("mem://s/_log/t2", b"own")
-    assert fs.rename_no_replace("mem://s/_log/t2",
-                                "mem://s/_log/v1.json") is True
-    # sibling claims are invisible to _log-prefixed queries
-    assert coord.claims_under("mem://s/_log", recursive=True) \
-        == [("mem://s/_log/v1.json",
-             coord.get("mem://s/_log/v1.json")[2])]
-    # recursive delete under _log releases ONLY _log claims
-    fs.delete("mem://s/_log", recursive=True)
-    assert coord.get("mem://s/_log/v1.json") is None
-    assert coord.get("mem://s/Xlog/v1.json") is not None
-    assert fs.read_bytes("mem://s/Xlog/v1.json") == b"sib"
-
-
-def test_store_runs_on_cas_backend_end_to_end(spark, tmp_path, monkeypatch):
-    """SONAR_LOGSTORE=cas swaps the conditional-put backend under an
-    unmodified SonarStore: real ingest commits through the
-    coordinator, metadata mutations version normally, time travel and
-    vacuum work, and the stock backend reopens the SAME root
-    read-compatibly (the log format is backend-agnostic)."""
-    import os as _os
-
-    from covsonar_spark.store import SonarStore
-
-    monkeypatch.setenv("SONAR_LOGSTORE", "cas")
-    root = str(tmp_path / "cas-store")
-    st = SonarStore.open(spark, root,
-                         ref_path="/root/reference/lib/ref.fna",
-                         gff_path="/root/reference/lib/ref.gff3")
-    from covsonar_spark.logstore import CasObjectFS
-    assert isinstance(st._log.fs, CasObjectFS)
-
-    ref = st.ref_seq
-    recs = spark.createDataFrame(
-        [(f"ACC{i}", "cas e2e", ref[:i + 1 if i else 0] + ref[i + 1 if i else 0:])
-         for i in range(3)],
-        "accession string, description string, sequence string")
-    rep = st.add_fasta_df(recs)
-    assert rep["paranoid_mismatches"] == []
-    v1 = st._log.latest()[0]
-    upd = spark.createDataFrame([("ACC0", "wave-1")],
-                                "accession string, technology string")
-    st.update_metadata(upd)
-    assert _os.path.exists(_os.path.join(root, "_log", ".cas.sqlite"))
-
-    # fresh handle (fresh coordinator connections): reads + time travel
-    st2 = SonarStore.open(spark, root,
-                          ref_path="/root/reference/lib/ref.fna",
-                          gff_path="/root/reference/lib/ref.gff3")
-    assert isinstance(st2._log.fs, CasObjectFS)
-    now = {r["accession"]: r["technology"]
-           for r in st2.table("genomes").select(
-               "accession", "technology").collect()}
-    assert now["ACC0"] == "wave-1" and len(now) == 3
-    then = {r["technology"]
-            for r in st2.table_at("genomes", v1).select(
-                "technology").collect()}
-    assert then == {None}
-    st2.vacuum(min_age_s=0.0, lease_wait=30.0)
-    assert st2.table("genomes").count() == 3
-
-    # and the stock backend reopens the SAME root read-compatibly
-    monkeypatch.delenv("SONAR_LOGSTORE")
-    st3 = SonarStore.open(spark, root,
-                          ref_path="/root/reference/lib/ref.fna",
-                          gff_path="/root/reference/lib/ref.gff3")
-    assert not isinstance(st3._log.fs, CasObjectFS)
-    assert st3.table("genomes").count() == 3
-
-
-# -- claim-free shape (CondPutObjectFS) ------------------------------------
-
-def _mkcondput(mem=None):
-    from covsonar_spark.logstore import CondPutObjectFS
-    mem = mem or MemObjectFS()
-    return mem, CondPutObjectFS(mem)
-
-
-def test_condput_never_uses_payload_store_rename():
-    """The claim-free shape rests ONLY on the payload store's atomic
-    put-if-absent: a full protocol exchange must never consult the
-    payload store's own rename primitive, and must leave no coordinator
-    state anywhere (the payload IS the claim)."""
-    mem, fs = _mkcondput()
+def test_stale_lease_breakable_on_copy_backends():
+    """A dead holder's stale lease must be breakable on a backend whose
+    rename stamps the COPY time (HadoopFS on s3a/gs/abfs; the fake here
+    too).  The break path's mtime-freshness restore check assumes a
+    rename carries the source mtime, true for hardlink/rename; on a
+    copy it read every displaced stale lock as 'freshly held' and
+    restored it — the restore re-stamped the mtime too, making the
+    lease unbreakable forever.  The check is gated on
+    RENAME_PRESERVES_MTIME."""
+    fs = MemObjectFS()
+    assert fs.RENAME_PRESERVES_MTIME is False
     log = _mklog(fs)
-    snap = None
-    for i in range(12):
-        snap = log.latest()
-        base = dict(snap[1]) if snap else {}
-        tables = {**{t: list(d) for t, d in base.items()},
-                  "t": base.get("t", []) + [f"d{i}"]}
-        log.commit(snap[0] if snap else 0, tables,
-                   base_tables=base if snap else None,
-                   base_checkpoint=(getattr(snap, "checkpoint", None)
-                                    if snap else None))
-    assert log.latest()[0] == 12
-    log.vacuum({}, retain_last=2, min_age_s=0.0)
-    assert mem.renames == 0
-
-
-def test_condput_loser_does_not_consume_src():
-    """A conditional PUT that loses (dst already exists) must leave the
-    caller's source untouched — the commit read-back needs nothing, but
-    a lock-acquire loop re-stages from scratch and vacuum owns the tmp;
-    eagerly deleting a loser's src would be fine, silently deleting a
-    WINNER's src on a false loss would not, so the invariant is: src is
-    consumed exactly on True."""
-    mem, fs = _mkcondput()
-    fs.write_bytes("mem://s/_log/t1", b"A")
-    assert fs.rename_no_replace("mem://s/_log/t1", "mem://s/_log/v1.json")
-    fs.write_bytes("mem://s/_log/t2", b"B")
-    assert fs.rename_no_replace("mem://s/_log/t2",
-                                "mem://s/_log/v1.json") is False
-    assert fs.read_bytes("mem://s/_log/t2") == b"B"        # src survives
-    assert fs.read_bytes("mem://s/_log/v1.json") == b"A"   # winner intact
-    assert not fs.exists("mem://s/_log/t1")                # winner's consumed
-
-
-def test_condput_crash_between_put_and_src_delete_is_decided():
-    """The shape's only crash window: the conditional PUT landed, the
-    process died before deleting its staged source.  The outcome is
-    DECIDED (the PUT was the commit point) — the read-back self-heals
-    to a win and the leaked source is ordinary vacuum fodder."""
-    mem, fs = _mkcondput()
-    log = _mklog(fs)
-    v = log.commit(0, {"t": ["a"]})
-    fs.fail = ["lost_ack"]   # lands fully, then the ack is lost
-    v2 = log.commit(v, {"t": ["a", "b"]}, commit_id="mine")
-    assert v2 == v + 1 and log.resolve(v2)["id"] == "mine"
-
-
-def test_condput_concurrent_putters_single_winner():
-    mem, _ = _mkcondput()
-    from covsonar_spark.logstore import CondPutObjectFS
-    a, b = CondPutObjectFS(mem), CondPutObjectFS(mem)
-    a.write_bytes("mem://s/ta", b"A")
-    b.write_bytes("mem://s/tb", b"B")
-    ra = a.rename_no_replace("mem://s/ta", "mem://s/v1.json")
-    rb = b.rename_no_replace("mem://s/tb", "mem://s/v1.json")
-    assert (ra, rb) in ((True, False), (False, True))
-    assert a.read_bytes("mem://s/v1.json") == (b"A" if ra else b"B")
-
-
-def test_local_condput_store_put_if_absent(tmp_path):
-    """The posix composition's primitive: tmp write + hardlink is
-    creation-atomic and content-atomic, loses cleanly on an existing
-    destination, and leaves no staging files behind."""
-    import os as _os
-
-    from covsonar_spark.logstore import LocalCondPutStore
-    st = LocalCondPutStore()
-    p = str(tmp_path / "obj")
-    assert st.put_if_absent(p, b"first") is True
-    assert st.put_if_absent(p, b"second") is False
-    assert st.read_bytes(p) == b"first"
-    assert [n for n in _os.listdir(tmp_path) if ".cp-" in n] == []
-
-
-# -- mixed-backend writer guard (ADVICE r9: backend marker) ----------------
-
-def test_backend_marker_refuses_mixed_writers(tmp_path):
-    """A root first written through the CAS coordinator records a
-    ``_log/.backend`` marker; a stock-backend writer on the same root
-    must be refused at mutation time (commit AND lease), because its
-    hardlink wins bypass the coordinator — two writers, one per
-    backend, could both win one slot.  Reads stay backend-agnostic."""
-    from covsonar_spark.commitlog import StoreBackendMismatch
-
-    mem, coord, fs = _mkcas(tmp_path)
-    log = _mklog(fs)
-    v = log.commit(0, {"t": ["a"]})
-    assert mem.read_bytes("mem://store/_log/.backend") == b"cas"
-
-    stock = _mklog(mem)                      # same root, stock semantics
-    assert stock.latest()[0] == v            # reads fine
-    with pytest.raises(StoreBackendMismatch):
-        stock.commit(v, {"t": ["a", "b"]})
-    with pytest.raises(StoreBackendMismatch):
-        stock.acquire_lease(timeout=1.0)
-    assert log.latest()[0] == v              # log unharmed
-
-    # and the reverse misconfiguration: a condput writer on a cas root
-    from covsonar_spark.logstore import CondPutObjectFS
-    cond = _mklog(CondPutObjectFS(mem))
-    with pytest.raises(StoreBackendMismatch):
-        cond.commit(v, {"t": ["a", "c"]})
-
-
-def test_backend_marker_adopts_legacy_root(tmp_path):
-    """A marker-less (stock-written) root adopted by a cas writer:
-    the first cas mutation records the marker, after which stock
-    writers are refused — the documented single-backend discipline."""
-    from covsonar_spark.commitlog import StoreBackendMismatch
-
-    mem = MemObjectFS()
-    stock = _mklog(mem)
-    v = stock.commit(0, {"t": ["a"]})
-    _, coord, fs = _mkcas(tmp_path, mem)
-    caslog = _mklog(fs)
-    v2 = caslog.commit(v, {"t": ["a", "b"]})
-    assert mem.read_bytes("mem://store/_log/.backend") == b"cas"
-    stock2 = _mklog(mem)                 # fresh stock handle, same root
-    with pytest.raises(StoreBackendMismatch):
-        stock2.commit(v2, {"t": ["a", "b", "c"]})
-
-
-def test_backend_marker_condput_and_stock_coexist():
-    """condput-vs-stock is exempt from the refusal: both arbitrate on
-    the payload store's own atomic create, so they mutually exclude
-    correctly (on posix: hardlink vs hardlink)."""
-    mem, fs = _mkcondput()
-    log = _mklog(fs)
-    v = log.commit(0, {"t": ["a"]})
-    assert mem.read_bytes("mem://store/_log/.backend") == b"condput"
-    stock = _mklog(mem)
-    v2 = stock.commit(v, {"t": ["a", "b"]})     # allowed
-    assert log.latest()[0] == v2
-
-
-# -- ABA resurrection guard (ADVICE r9) ------------------------------------
-
-def test_cas_stale_heal_does_not_resurrect_deleted_slot(tmp_path):
-    """A healer completing a crashed publish stalls between reading the
-    source and the blind PUT; the slot is deleted (vacuum reaps the
-    contended name, releasing the claim) in that window.  The stale PUT
-    must be SKIPPED — executing it would resurrect the deleted object
-    with no claim row guarding it, and the next conditional put would
-    see an unclaimed-but-present object (a forked history for recycled
-    names like the lease lock)."""
-    mem, coord, fs = _mkcas(tmp_path)
-    fs.write_bytes("mem://s/_log/v7.json.tmp-a", b'{"id": "w1"}')
-    fs.fail = ["crash_after_claim"]
-    with pytest.raises(TimeoutError):
-        fs.rename_no_replace("mem://s/_log/v7.json.tmp-a",
-                             "mem://s/_log/v7.json")
-
-    state = {"fired": False}
-    real_read = mem.read_bytes
-
-    def read_then_slot_deleted(path):
-        data = real_read(path)
-        if path == "mem://s/_log/v7.json.tmp-a" and not state["fired"]:
-            state["fired"] = True
-            # vacuum-style delete of the claimed slot lands in the
-            # healer's stall window (releases the claim via forget_if)
-            fs.delete("mem://s/_log/v7.json", recursive=False)
-        return data
-
-    mem.read_bytes = read_then_slot_deleted
-    try:
-        from covsonar_spark.logstore import CasObjectFS
-        healer = CasObjectFS(mem, coord)
-        healer.list_names("mem://s/_log")       # triggers _reconcile
-    finally:
-        mem.read_bytes = real_read
-    assert state["fired"]
-    assert not mem.exists("mem://s/_log/v7.json")       # not resurrected
-    assert coord.get("mem://s/_log/v7.json") is None    # no zombie claim
-
-
-def test_cas_stale_upload_repaired_toward_new_claim(tmp_path):
-    """The residual blind-PUT window: the healer's upload itself lands
-    AFTER the slot was vacuumed and taken over by a new winner.  The
-    post-write claim re-check must repair toward the CURRENT claim —
-    re-copying the successor's source — so the object converges to the
-    claim's recorded payload instead of holding the stale bytes under
-    the successor's claim (a forked history)."""
-    mem, coord, fs = _mkcas(tmp_path)
-    fs.write_bytes("mem://s/_log/L.tmp-a", b"A")
-    fs.fail = ["crash_after_claim"]
-    with pytest.raises(TimeoutError):
-        fs.rename_no_replace("mem://s/_log/L.tmp-a", "mem://s/_log/L")
-
-    from covsonar_spark.logstore import CasObjectFS
-    state = {"fired": False}
-    real_write = mem.write_bytes
-
-    def write_after_takeover(path, data, overwrite=True):
-        if (path == "mem://s/_log/L" and data == b"A"
-                and not state["fired"]):
-            # the healer's stale PUT is in flight: vacuum reaps the
-            # slot and a new winner CLAIMS it (payload still pending —
-            # the window where repair material exists) before it lands
-            state["fired"] = True
-            fs.delete("mem://s/_log/L", recursive=False)
-            real_write("mem://s/_log/L.tmp-b", b"B")
-            assert coord.claim("mem://s/_log/L",
-                               "mem://s/_log/L.tmp-b") is not None
-        return real_write(path, data, overwrite=overwrite)
-
-    mem.write_bytes = write_after_takeover
-    try:
-        healer = CasObjectFS(mem, coord)
-        healer.list_names("mem://s/_log")       # triggers _reconcile
-    finally:
-        mem.write_bytes = real_write
-    assert state["fired"]
-    # the claim and the payload agree: B's bytes are published and its
-    # claim is completed by the repairing healer
-    assert fs.read_bytes("mem://s/_log/L") == b"B"
-    got = coord.get("mem://s/_log/L")
-    assert got is not None and got[0] == "mem://s/_log/L.tmp-b" and got[1]
-
-
-def test_claim_identity_stamps_are_unique(tmp_path):
-    """Identity stamps must be unique across rapid mint/release cycles
-    of one slot name — equal stamps would reopen the ABA the identity
-    CAS exists to prevent (time.time() alone repeats within clock
-    resolution or across an NTP step-back)."""
-    from covsonar_spark.logstore import SQLiteCoordinator
-    coord = SQLiteCoordinator(str(tmp_path / "c.sqlite"))
-    seen = set()
-    for _ in range(2000):
-        at = coord.claim("d", "s")
-        assert at is not None and at not in seen
-        seen.add(at)
-        coord.forget_if("d", at)
-
-
-def test_local_condput_works_without_hardlinks(tmp_path, monkeypatch):
-    """put_if_absent must survive hardlink-less mounts (exFAT / SMB /
-    FUSE): it publishes through LocalFS.rename_no_replace, which probes
-    link support per directory and falls back to the mkdir-mutex
-    emulation — a raw os.link would crash every condput publish
-    exactly where the stock backend keeps working."""
-    import os as _os
-
-    from covsonar_spark.logstore import LocalCondPutStore
-
-    def no_link(src, dst):
-        raise OSError(38, "Function not implemented")
-
-    monkeypatch.setattr(_os, "link", no_link)
-    st = LocalCondPutStore()
-    p = str(tmp_path / "obj")
-    assert st.put_if_absent(p, b"first") is True
-    assert st.put_if_absent(p, b"second") is False
-    assert st.read_bytes(p) == b"first"
-
-
-def test_env_logstore_rejects_unknown_value(tmp_path, monkeypatch):
-    """A typo'd SONAR_LOGSTORE must raise, not silently run stock —
-    the operator would believe a coordinator is arbitrating, and on a
-    fresh root no marker would ever be recorded to catch it."""
-    from covsonar_spark.logstore import env_logstore
-
-    monkeypatch.setenv("SONAR_LOGSTORE", "CAS")
-    with pytest.raises(ValueError, match="SONAR_LOGSTORE"):
-        env_logstore(str(tmp_path / "s"))
-    monkeypatch.setenv("SONAR_LOGSTORE", "")
-    assert env_logstore(str(tmp_path / "s")) is None
-    monkeypatch.delenv("SONAR_LOGSTORE")
-    assert env_logstore(str(tmp_path / "s")) is None
-
-
-def test_cas_mark_complete_is_identity_conditioned(tmp_path):
-    """mark_complete must not stamp a SUCCESSOR's fresh incomplete
-    claim complete: completing by (path, at) identity, a stale healer
-    that lost its claim mid-copy cannot flip the new claimant's row."""
-    from covsonar_spark.logstore import SQLiteCoordinator
-    coord = SQLiteCoordinator(str(tmp_path / "c.sqlite"))
-    at1 = coord.claim("d", "s1")
-    assert at1 is not None
-    coord.forget_if("d", at1)
-    time.sleep(0.002)                    # distinct identity stamp
-    at2 = coord.claim("d", "s2")
-    assert at2 is not None and at2 != at1
-    coord.mark_complete("d", at1)        # stale completer
-    assert coord.get("d") == ("s2", False, at2)
-    coord.mark_complete("d", at2)        # rightful completer
-    assert coord.get("d") == ("s2", True, at2)
-
-
-def test_store_runs_on_condput_backend_end_to_end(spark, tmp_path,
-                                                  monkeypatch):
-    """SONAR_LOGSTORE=condput swaps the claim-free backend under an
-    unmodified SonarStore: ingest commits land through put-if-absent,
-    metadata mutations version normally, and a stock handle reads the
-    same root (and may even write — condput/stock arbitrate on the same
-    payload-store primitive)."""
-    from covsonar_spark.store import SonarStore
-
-    monkeypatch.setenv("SONAR_LOGSTORE", "condput")
-    root = str(tmp_path / "condput-store")
-    st = SonarStore.open(spark, root,
-                         ref_path="/root/reference/lib/ref.fna",
-                         gff_path="/root/reference/lib/ref.gff3")
-    from covsonar_spark.logstore import CondPutObjectFS
-    assert isinstance(st._log.fs, CondPutObjectFS)
-
-    ref = st.ref_seq
-    recs = spark.createDataFrame(
-        [(f"ACC{i}", "condput e2e", ref) for i in range(3)],
-        "accession string, description string, sequence string")
-    rep = st.add_fasta_df(recs)
-    assert rep["paranoid_mismatches"] == []
-    v1 = st._log.latest()[0]
-    upd = spark.createDataFrame([("ACC0", "wave-1")],
-                                "accession string, technology string")
-    st.update_metadata(upd)
-    import os as _os
-    assert _os.path.exists(_os.path.join(root, "_log", ".backend"))
-
-    monkeypatch.delenv("SONAR_LOGSTORE")
-    st2 = SonarStore.open(spark, root,
-                          ref_path="/root/reference/lib/ref.fna",
-                          gff_path="/root/reference/lib/ref.gff3")
-    assert not isinstance(st2._log.fs, CondPutObjectFS)
-    now = {r["accession"]: r["technology"]
-           for r in st2.table("genomes").select(
-               "accession", "technology").collect()}
-    assert now["ACC0"] == "wave-1" and len(now) == 3
-    assert {r["technology"] for r in st2.table_at(
-        "genomes", v1).select("technology").collect()} == {None}
-
-
-@pytest.mark.parametrize("backend", ["cas", "condput"])
-def test_stale_lease_breakable_on_copy_backends(tmp_path, backend):
-    """A dead holder's stale lease must be breakable on the copy-based
-    conditional-put backends.  Their rename stamps the COPY time, so
-    the break path's mtime-freshness restore check (which assumes a
-    rename carries the source mtime, true for hardlink/rename) read
-    every displaced stale lock as 'freshly held' and restored it — the
-    restore re-stamped the mtime too, making the lease unbreakable
-    forever.  The check is now gated on RENAME_PRESERVES_MTIME."""
-    import os
-
-    from covsonar_spark.logstore import (local_cas_logstore,
-                                         local_condput_logstore)
-    root = str(tmp_path / "s")
-    mk = (local_cas_logstore if backend == "cas"
-          else local_condput_logstore)
-    log = CommitLog(None, root, fs=mk(root))
     log.acquire_lease()
-    lock = os.path.join(root, "_log", "LOCK")
-    old_t = time.time() - 10_000
-    os.utime(lock, (old_t, old_t))       # the holder is "dead"
-    taker = CommitLog(None, root, fs=mk(root))
-    owner = taker.acquire_lease(timeout=20.0, lease_timeout=3600.0)
-    assert owner
+    fs._mtime["mem://store/_log/LOCK"] = time.time() - 10_000   # "dead"
+    taker = _mklog(fs)
+    owner = taker.acquire_lease(timeout=5.0, lease_timeout=3600.0)
+    assert json.loads(fs.read_bytes("mem://store/_log/LOCK"))["owner"] \
+        == owner
     taker.release_lease(owner)
-
-
-def test_cas_src_vanishing_after_claim_is_clean_loss(tmp_path):
-    """If the winner's own source object vanishes between the claim
-    and the copy (an external GC of its staged file), the rename must
-    report a definitive FALSE — returning True with no payload
-    published is a data-losing false win — and must release its empty
-    claim so the slot stays winnable (LocalFS's os.link raises
-    FileNotFoundError and loses cleanly in the same situation)."""
-    mem, coord, fs = _mkcas(tmp_path)
-    fs.write_bytes("mem://s/_log/v1.json.tmp-a", b'{"id": "w1"}')
-
-    real_claim = coord.claim
-
-    def claim_then_lose_src(dst, src):
-        ok = real_claim(dst, src)
-        if ok and src == "mem://s/_log/v1.json.tmp-a":
-            mem.delete(src, recursive=False)    # external GC mid-call
-        return ok
-
-    coord.claim = claim_then_lose_src
-    try:
-        assert fs.rename_no_replace("mem://s/_log/v1.json.tmp-a",
-                                    "mem://s/_log/v1.json") is False
-    finally:
-        coord.claim = real_claim
-    assert not fs.exists("mem://s/_log/v1.json")
-    # the slot stays winnable for the retry / the next writer
-    fs.write_bytes("mem://s/_log/v1.json.tmp-b", b'{"id": "w2"}')
-    assert fs.rename_no_replace("mem://s/_log/v1.json.tmp-b",
-                                "mem://s/_log/v1.json") is True
-    assert fs.read_bytes("mem://s/_log/v1.json") == b'{"id": "w2"}'

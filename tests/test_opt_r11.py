@@ -53,6 +53,19 @@ def test_cm_estimate_carries_extra_columns(spark):
     assert n_scans == 2, plan  # cells build + the single exact aggregate
 
 
+def test_cm_estimate_rejects_probe_column_names(spark):
+    """An extra keys column named like a probe column (i, bucket, cnt)
+    would be joined on or overwritten and multiply a key's rows: it
+    must raise instead of returning a wrong estimate."""
+    from covsonar_spark.operators.sketches import cm_cells, cm_estimate
+
+    ev = spark.createDataFrame([("a",), ("a",), ("b",)], "event_type string")
+    cells = cm_cells(ev, "event_type")
+    keys = spark.createDataFrame([("a", 2), ("b", 1)], "key string, cnt long")
+    with pytest.raises(ValueError, match="cnt"):
+        cm_estimate(cells, keys)
+
+
 def test_sessionize_stateful_projects_before_state_shuffle(spark):
     """The stateful sessionizer reads only (user_id, ts_us) — the
     projection must sit BELOW the state exchange so the fat events

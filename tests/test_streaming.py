@@ -394,6 +394,89 @@ def test_dim_swap_drains_inflight_batches(spark, tmp_path):
     assert got == want
 
 
+def test_dim_wave_joins_batch_that_was_in_flight(spark, tmp_path):
+    """update_dim's ΔV = A_old ⋈ ΔB must include a batch that was still
+    in flight (pinned to the old generation) when the wave started: its
+    fact dir lands only after the wave began, so the fact log has to be
+    listed after the drain.  Listing it up front left the batch out of
+    ΔV for good — a permanent undercount of batch-1 ⋈ ΔB."""
+    import os
+    import threading
+
+    from pyspark.sql import functions as F
+
+    from covsonar_spark.streaming.ivm import StreamingJoinView
+
+    sf = "/root/testdata/sf0.001"
+    o = spark.read.parquet(f"{sf}/orders.parquet").select(
+        "o_orderkey", F.col("o_custkey").alias("c_custkey"))
+    c = spark.read.parquet(f"{sf}/customer.parquet").select(
+        "c_custkey", "c_name")
+    b0 = c.where(F.col("c_custkey") % 2 == 0)
+    db = c.where(F.col("c_custkey") % 2 == 1)
+    d0 = o.where(F.col("o_orderkey") % 2 == 0)
+    d1 = o.where(F.col("o_orderkey") % 2 == 1)
+
+    state = str(tmp_path / "state")
+    sjv = StreamingJoinView(spark, state, b0, ["c_custkey"])
+    sjv.process_batch(d0, batch_id=0)
+
+    # batch 1 is in flight on gen 0: exactly what process_batch holds
+    # between its locked dim acquisition and its finally-release
+    with sjv._idle:
+        sjv._inflight += 1
+    done = threading.Event()
+    t = threading.Thread(target=lambda: (sjv.update_dim(db, "late"),
+                                         done.set()), daemon=True)
+    t.start()
+    assert not done.wait(timeout=1.2)       # the wave waits for the drain
+    # the in-flight batch's two sink writes land, then it drains
+    d1.join(b0, ["c_custkey"]).write.parquet(
+        os.path.join(state, "view", "batch=1_g0"))
+    d1.write.parquet(os.path.join(state, "fact", "batch=1"))
+    with sjv._idle:
+        sjv._inflight -= 1
+        sjv._idle.notify_all()
+    assert done.wait(timeout=60.0)
+    t.join(timeout=30.0)
+
+    got = sorted(tuple(r) for r in sjv.view().collect())
+    want = sorted(tuple(r) for r in o.join(c, ["c_custkey"])
+                  .select(sjv.view().columns).collect())
+    assert got == want
+
+
+def test_failed_dim_swap_writes_no_delta_view(spark, tmp_path):
+    """A wave whose generation never swaps in must not leave a
+    ``batch=dim_<tag>`` ΔV behind: the view would hold A_old ⋈ ΔB rows
+    for a dimension delta no later batch joins."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from covsonar_spark.streaming.ivm import StreamingJoinView
+
+    sf = "/root/testdata/sf0.001"
+    o = spark.read.parquet(f"{sf}/orders.parquet").select(
+        "o_orderkey", F.col("o_custkey").alias("c_custkey"))
+    c = spark.read.parquet(f"{sf}/customer.parquet").select(
+        "c_custkey", "c_name")
+    state = str(tmp_path / "state")
+    sjv = StreamingJoinView(spark, state,
+                            c.where(F.col("c_custkey") % 2 == 0),
+                            ["c_custkey"])
+    sjv.process_batch(o, batch_id=0)
+
+    def boom():
+        raise RuntimeError("injected swap failure")
+
+    sjv._drain_inflight = boom
+    with pytest.raises(RuntimeError, match="injected"):
+        sjv.update_dim(c.where(F.col("c_custkey") % 2 == 1), "late")
+    assert not os.path.exists(os.path.join(state, "view", "batch=dim_late"))
+    assert sjv._current_gen() == 0
+
+
 def test_view_log_compaction(spark, tmp_path):
     """StreamingJoinView.compact() folds the per-batch delta dirs into
     one segment: the view is value-identical before/after, replayed

@@ -143,10 +143,6 @@ def child_killcommit(root: str, marker: str, when: str) -> None:
     mutation is durable even though the writer never returns)."""
     spark = _spark("store-stress-killcommit")
     st = _open(spark, root)
-    # hook the store's LIVE log fs INSTANCE (not LocalFS at class
-    # level) so the kill window works on any backend — including the
-    # SONAR_LOGSTORE=cas coordinator backend, whose rename never
-    # touches LocalFS
     fsobj = st._log.fs
     real_rename = fsobj.rename_no_replace
 
@@ -214,9 +210,8 @@ def child_recover(root: str) -> None:
 def child_breaker(root: str) -> None:
     """Try to break + acquire a stale lease; report win/lose."""
     from covsonar_spark.commitlog import CommitLog
-    from covsonar_spark.logstore import env_logstore
 
-    log = CommitLog(None, root, fs=env_logstore(root))
+    log = CommitLog(None, root)
     try:
         owner = log.acquire_lease(timeout=3.0, lease_timeout=3600.0)
         print(json.dumps({"won": True, "owner": owner}))
@@ -343,8 +338,7 @@ def orchestrate(root: str) -> None:
 
     print("== phase 5: two-process stale-break race", flush=True)
     from covsonar_spark.commitlog import CommitLog
-    from covsonar_spark.logstore import env_logstore
-    log = CommitLog(None, root, fs=env_logstore(root))
+    log = CommitLog(None, root)
     log.acquire_lease()
     lock = os.path.join(root, "_log", "LOCK")
     old_t = time.time() - 10_000
