@@ -6,6 +6,7 @@ JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import sys
@@ -260,6 +261,8 @@ def main() -> None:
         "ingest_n": ingest_n,
         "ingest_large_genomes_per_sec": ingest_rate_lg,
         "ingest_large_n": ingest_n_lg,
+        "ingest_ref": _ingest_reference()[2]
+        if ingest_n or ingest_n_lg else None,
         "slowest": slowest,
         "queries_file": sidecar_name,
         # full per-query map inline per the driver contract (the sidecar
@@ -267,6 +270,42 @@ def main() -> None:
         # line ~4 KB
         "queries": times,
     }, separators=(",", ":")))
+
+
+@functools.lru_cache(maxsize=1)
+def _ingest_reference() -> tuple[str, list, str]:
+    """(reference, CDS list, label) of the ingest probes: the covsonar
+    reference when its files are present ("reference"), else the
+    benchmark generator's synthetic one ("synthetic": perfbench/synth.py,
+    a 29,903-bp reference with stop-free CDS)."""
+    import shutil
+    import tempfile
+
+    sys.path.insert(0, os.path.join(os.path.dirname(
+        os.path.abspath(__file__)), "tools"))
+    from bench_ingest import REF_DIR
+
+    from covsonar_spark.functions.genetics import (harmonize, parse_gff3,
+                                                   read_fasta_one)
+
+    fna = f"{REF_DIR}/lib/ref.fna"
+    if os.path.exists(fna):
+        _, _, ref = read_fasta_one(fna)
+        ref = harmonize(ref)
+        return ref, parse_gff3(f"{REF_DIR}/lib/ref.gff3", ref), "reference"
+    sys.path.insert(0, os.path.join(os.path.dirname(
+        os.path.abspath(__file__)), "perfbench"))
+    from synth import Corpus, gff3_text
+
+    ref = Corpus(1).ref
+    tmp = tempfile.mkdtemp(prefix="bench_ing_ref_")
+    try:
+        gff = os.path.join(tmp, "ref.gff3")
+        with open(gff, "w") as fh:
+            fh.write(gff3_text())
+        return ref, parse_gff3(gff, ref), "synthetic"
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _ingest_probe(spark, n: int) -> float:
@@ -281,14 +320,10 @@ def _ingest_probe(spark, n: int) -> float:
         os.path.abspath(__file__)), "tools"))
     from bench_ingest import mutate
 
-    from covsonar_spark.functions.genetics import (harmonize, parse_gff3,
-                                                   read_fasta_one)
     from covsonar_spark.sources.fasta import read_fasta
     from covsonar_spark.store import SonarStore
 
-    _, _, ref = read_fasta_one("/root/reference/lib/ref.fna")
-    ref = harmonize(ref)
-    cds = parse_gff3("/root/reference/lib/ref.gff3", ref)
+    ref, cds, _label = _ingest_reference()
     corpus = tempfile.mkdtemp(prefix="bench_ing_corpus_")
     root = tempfile.mkdtemp(prefix="bench_ing_store_")
     try:

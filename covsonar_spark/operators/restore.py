@@ -154,12 +154,24 @@ def restore_alignments(store, accessions: list[str] | None = None) -> DataFrame:
 def paranoid_check(store, expected: DataFrame) -> list[str]:
     """T15: restore every (accession, seqhash, sequence) from the stored
     variant rows and byte-compare — returns mismatching accessions
-    (reference be_paranoid, lib/sonardb.py:3684-3819, as one join)."""
-    hashes = expected.select("seqhash").distinct()
-    restored = restored_sequences(store.table("dna_variants"), hashes, store.ref_seq) \
-        .withColumnRenamed("sequence", "restored")
-    cmp = expected.join(restored, "seqhash", "left")
-    bad = cmp.where(
-        F.col("restored").isNull() | (F.col("restored") != F.col("sequence"))
-    )
-    return [r["accession"] for r in bad.select("accession").collect()]
+    (reference be_paranoid, lib/sonardb.py:3684-3819, as one cogroup).
+
+    The expected rows and the stored ``dna_variants`` rows of their
+    seqhashes meet in one cogroup on seqhash: each group restores its
+    sequence once (no variant rows → the reference) and compares every
+    accession of the group against it.  The stored rows are read through
+    ``store.table``, so inside an open mutation session they include the
+    rows staged moments earlier."""
+    ref_seq = store.ref_seq
+    want = expected.select("accession", "seqhash", "sequence")
+    stored = store.table("dna_variants").select("seqhash", "start", "ref", "alt") \
+        .join(want.select("seqhash"), "seqhash", "left_semi")
+
+    def check(rows: pd.DataFrame, variants: pd.DataFrame) -> pd.DataFrame:
+        restored = apply_variants(ref_seq, variants.to_dict("records")) \
+            if len(variants) else ref_seq
+        return rows.loc[rows["sequence"] != restored, ["accession"]]
+
+    bad = want.groupBy("seqhash").cogroup(stored.groupBy("seqhash")) \
+        .applyInPandas(check, "accession string")
+    return [r["accession"] for r in bad.collect()]

@@ -34,7 +34,7 @@ import os
 import threading
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from covsonar_spark import schemas
@@ -1295,118 +1295,159 @@ class SonarStore:
         1. harmonize + SEGUID (JVM expressions)
         2. conflict check: existing accession with a different sequence →
            error (or replace with ``force``)
-        3. distinct NEW seqhashes (anti-join) → alignment UDF → profiles
-           + variant tables
+        3. distinct NEW seqhashes → alignment UDF → profiles + variant
+           tables
         4. append/merge the five tables
         5. paranoid round-trip: restore every new genome from stored
            variants, byte-compare with the input (T15)
 
-        ``report["timings"]`` holds wall seconds per phase: ``validate``
-        (batch scan + the two conflict checks), ``derive`` (alignment +
-        variant derivation + error collect), ``appends`` (first append
-        start to last append end), ``paranoid`` and ``manifest``
-        (manifest refresh).  The paranoid check overlaps the appends.
-        """
-        timings: dict[str, float] = {}
-        t0 = time.perf_counter()
-        pre = records.select(
-            F.col("accession"),
-            F.col("description"),
-            ING.harmonized(F.col("sequence")).alias("sequence"),
-        ).withColumn("seqhash", ING.seguid_col("sequence"))
-        # within-batch duplicates: identical records collapse silently;
-        # one accession with two different sequences is a hard error —
-        # a distributed read has no "last record wins" order to honor
-        # (reference iterates the FASTA sequentially, sonar.py:572-641)
-        pre = pre.dropDuplicates(["accession", "seqhash"]).cache()
-        # header-only / empty-sequence records are SKIPPED like the
-        # reference (sonar.py:579-580) — ingesting them would align as
-        # a whole-genome deletion and pollute the store with junk
-        rec = pre.where(F.length("sequence") > 0)
-        batch_dup = rec.groupBy("accession").count().where(F.col("count") > 1)
+        Steps 1–2 build ONE batch frame — a row per accession with its
+        stored row and the flags every later step filters on — and
+        ``localCheckpoint`` it; its counts are observed while it is
+        materialized, so validation adds no job of its own.  The aligner
+        input, the ``sequences``/``genomes`` appends and the paranoid
+        input are filters of that checkpoint; nothing re-joins the
+        stored tables.
 
-        existing = self.table("genomes").select(
-            "accession",
-            F.col("seqhash").alias("old_seqhash"),
-            F.col("description").alias("old_description"))
-        # a changed DESCRIPTION is a conflict too (reference
-        # sonar.py:595-600 errors without --force and updates with it)
-        same_row = ((F.col("seqhash") == F.col("old_seqhash"))
-                    & F.col("description").eqNullSafe(F.col("old_description")))
-        conflicts = rec.join(existing, "accession").where(~same_row)
-        # the two pre-write validations are independent scans of the
-        # cached batch — submit them as concurrent jobs (the first one
-        # also populates the cache)
+        ``report["timings"]`` holds wall seconds per phase: ``validate``
+        (the batch checkpoint: scan, harmonize+SEGUID, dedup, the joins
+        with the stored genomes/sequences and the batch counts),
+        ``derive`` (alignment + variant derivation, errors and OK count
+        observed on its checkpoint), ``appends`` (first append start to
+        last append end), ``paranoid`` and ``manifest`` (manifest
+        refresh).  The paranoid check overlaps the appends.
+        """
         import concurrent.futures as _cf
 
-        with _cf.ThreadPoolExecutor(max_workers=2) as _vp:
-            dup_fut = _vp.submit(
-                lambda: [r["accession"] for r in batch_dup.limit(5).collect()])
-            n_conflicts_fut = _vp.submit(conflicts.count)
-            dups = dup_fut.result()
-            n_conflicts = n_conflicts_fut.result()
-        if dups:
+        timings: dict[str, float] = {}
+        t0 = time.perf_counter()
+        nonempty = F.length("sequence") > 0
+        # one row per accession.  Identical records collapse silently;
+        # one accession with two different sequences is a hard error —
+        # a distributed read has no "last record wins" order to honor
+        # (reference iterates the FASTA sequentially, sonar.py:572-641).
+        # Header-only / empty-sequence records are SKIPPED like the
+        # reference (sonar.py:579-580) — ingesting them would align as
+        # a whole-genome deletion and pollute the store with junk.
+        per_acc = records.select(
+            "accession", "description",
+            ING.harmonized(F.col("sequence")).alias("sequence"),
+        ).withColumn("seqhash", ING.seguid_col("sequence")) \
+         .groupBy("accession").agg(
+            F.first(F.when(nonempty, F.struct("seqhash", "description",
+                                              "sequence")),
+                    ignorenulls=True).alias("r"),
+            (F.min(F.when(nonempty, F.col("seqhash")))
+             != F.max(F.when(nonempty, F.col("seqhash")))).alias("dup"),
+            F.count_if(~nonempty).alias("n_empty"))
+        # the stored rows per accession as a (min, max) pair: a legacy
+        # store may hold an accession twice, and only a batch row equal
+        # to BOTH equals every stored copy — no row multiplies
+        old_row = F.struct("seqhash", "description")
+        stored = self.table("genomes").groupBy("accession").agg(
+            F.min(old_row).alias("old_lo"), F.max(old_row).alias("old_hi"))
+        known = self.table("sequences").select("seqhash").distinct() \
+            .withColumn("known", F.lit(True))
+        row = F.struct(F.col("r.seqhash").alias("seqhash"),
+                       F.col("r.description").alias("description"))
+        # a changed DESCRIPTION is a conflict too (reference
+        # sonar.py:595-600 errors without --force and updates with it)
+        same_row = F.coalesce(F.col("old_lo").eqNullSafe(row)
+                              & F.col("old_hi").eqNullSafe(row), F.lit(False))
+        filled = F.col("r").isNotNull()
+        # each join meets two sides already hash-partitioned on its key
+        # (the two aggregates; the seqhash window and the distinct known
+        # hashes): a merge join adds no exchange, a broadcast would add
+        # a job per join
+        batch = per_acc.join(stored.hint("merge"), "accession", "left") \
+            .select(
+                "accession", "r.seqhash", "r.description", "r.sequence",
+                filled.alias("filled"),
+                F.coalesce("dup", F.lit(False)).alias("dup"),
+                (F.col("n_empty") > 0).alias("has_empty"),
+                same_row.alias("same_row"),
+                (filled & F.col("old_lo").isNotNull() & ~same_row
+                 ).alias("conflict")) \
+            .withColumn("first", F.row_number().over(
+                Window.partitionBy("seqhash").orderBy("accession")) == 1) \
+            .join(known.hint("merge"), "seqhash", "left") \
+            .withColumn("new", F.col("filled") & F.col("first")
+                        & F.col("known").isNull()) \
+            .drop("first", "known")
+        counts = Observation("add_batch")
+        # localCheckpoint (NOT cache): appending to the sequences /
+        # genomes paths below triggers CacheManager.recacheByPath, which
+        # would recompute a cached plan against the just-written tables
+        # (every new seqhash would then read as known, every new
+        # accession as stored); the truncated lineage is immune to the
+        # table writes, and nothing is left pinned if the add is rejected
+        batch = batch.observe(
+            counts,
+            F.count_if("filled").alias("added"),
+            F.count_if("has_empty").alias("skipped"),
+            F.count_if("dup").alias("dups"),
+            F.count_if("conflict").alias("conflicts"),
+        ).localCheckpoint()
+        n = counts.get
+
+        def sample(flag: str) -> list[str]:
+            return [r["accession"] for r in
+                    batch.where(flag).select("accession").limit(5).collect()]
+        if n["dups"]:
             raise ValueError(
                 f"input batch contains conflicting sequences for the same "
-                f"accession(s): {dups}")
+                f"accession(s): {sample('dup')}")
+        n_conflicts = n["conflicts"]
         if n_conflicts and not force:
-            sample = [r["accession"] for r in conflicts.select("accession").limit(5).collect()]
             raise ValueError(
                 f"{n_conflicts} accession(s) already stored with a different "
                 f"sequence or description (use force=True to replace), "
-                f"e.g. {sample}")
+                f"e.g. {sample('conflict')}")
 
         t1 = time.perf_counter()
         timings["validate"] = t1 - t0
-        known_seqs = self.table("sequences").select("seqhash")
-        new_seqs = (
-            rec.select("seqhash", "sequence").dropDuplicates(["seqhash"])
-            .join(known_seqs, "seqhash", "left_anti")
-        )
-
-        # localCheckpoint (NOT cache): appending to the sequences path
-        # below triggers CacheManager.recacheByPath, which would
-        # recompute a cached plan against the just-written table — the
-        # anti-join would then erase every new row from `ok` and the
-        # variant appends would write nothing. Truncating the lineage
-        # makes the profiled rows immune to the table writes.
-        profiled = ING.derive_profiles(new_seqs, self.ref_seq, self.cds_list,
-                                       band_extra=band_extra).localCheckpoint()
-        errors = profiled.where(F.col("error").isNotNull()) \
-                         .select("seqhash", "error").collect()
+        new_seqs = batch.where("new").select("seqhash", "sequence")
+        # localCheckpoint, not cache, for the same recacheByPath reason
+        derived = Observation("add_derive")
+        profiled = ING.derive_profiles(
+            new_seqs, self.ref_seq, self.cds_list, band_extra=band_extra,
+        ).observe(
+            derived,
+            F.count_if(F.col("error").isNull()).alias("ok"),
+            F.collect_list(F.when(F.col("error").isNotNull(), F.struct(
+                "seqhash", "error"))).alias("errors"),
+        ).localCheckpoint()
+        d = derived.get
+        errors = d["errors"]
         ok = profiled.where(F.col("error").isNull())
         timings["derive"] = time.perf_counter() - t1
 
         bad_hashes = {r["seqhash"] for r in errors}
+        good = ~F.col("seqhash").isin(list(bad_hashes)) if bad_hashes \
+            else F.lit(True)
         from covsonar_spark.sources.metadata import UPPERCASED
         meta = {k: (v.upper() if k in UPPERCASED and isinstance(v, str) else v)
                 for k, v in (metadata_defaults or {}).items()}
         gen_cols = [f.name for f in schemas.GENOMES.fields]
         # skip accessions already stored with the same sequence — re-add
         # must not clobber their metadata (reference P1, sonar.py:572-641)
-        unchanged = rec.join(existing, "accession").where(same_row) \
-                       .select("accession")
-        new_genomes = rec.drop("sequence").join(unchanged, "accession", "left_anti")
-        if bad_hashes:
-            new_genomes = new_genomes.where(~F.col("seqhash").isin(list(bad_hashes)))
+        new_genomes = batch.where(F.col("filled") & ~F.col("same_row")
+                                  & good) \
+            .select("accession", "description", "seqhash")
         for c in gen_cols:
             if c not in ("accession", "description", "seqhash", "imported"):
                 new_genomes = new_genomes.withColumn(c, F.lit(meta.get(c)).cast(
                     dict((f.name, f.dataType) for f in schemas.GENOMES.fields)[c]))
-        new_genomes = new_genomes.withColumn("imported", F.current_timestamp())
+        new_genomes = new_genomes.withColumn("imported", F.current_timestamp()) \
+            .select(*gen_cols)
 
-        # the five table appends are independent writes from the same
-        # checkpointed `profiled` (and the cached `pre`), so they run as
-        # CONCURRENT Spark jobs — driver threads submitting to one
-        # scheduler, the standard multi-job pattern.  be_paranoid reads
-        # only the stored dna_variants, so it overlaps the remaining
-        # appends as soon as that table lands.  Sequentially these six
-        # actions dominated the non-aligner half of cold ingest
-        # (~6 s of a 19 s / 1024-genome batch); overlapped they cost
-        # ~the slowest one.
+        # the five table appends are independent writes from the two
+        # checkpoints, so they run as CONCURRENT Spark jobs — driver
+        # threads submitting to one scheduler, the standard multi-job
+        # pattern.  be_paranoid reads only the stored dna_variants, so
+        # it overlaps the remaining appends as soon as that table lands.
         append_jobs = {
-            "sequences": new_seqs.join(
-                ok.select("seqhash"), "seqhash", "left_semi"),
+            "sequences": new_seqs.where(good),
             "profiles": ok.select(
                 "seqhash", "dna_profile", "aa_profile", "fs_profile",
                 P.token_bloom("dna_profile").alias("dna_bloom"),
@@ -1417,14 +1458,19 @@ class SonarStore:
         if n_conflicts == 0:
             # common case: nothing stored needs replacing (conflicting
             # accessions would have raised above, same-sequence re-adds
-            # were excluded via `unchanged`), so the batch APPENDS new
-            # month partitions instead of rewriting the whole genomes
-            # table — at 100 TB this is the difference between an O(batch)
-            # and an O(table) ingest
-            append_jobs["genomes"] = new_genomes.select(*gen_cols)
+            # were excluded via `same_row`), so the batch APPENDS new
+            # rows instead of rewriting the whole genomes table — at
+            # 100 TB this is the difference between an O(batch) and an
+            # O(table) ingest.  A genomes row is a sliver of its batch
+            # row (no sequence): a quarter of the batch partitions, the
+            # ratio _stage_write gives the seqhash-shaped tables, keeps
+            # the append from writing one small file per batch partition
+            append_jobs["genomes"] = new_genomes.coalesce(
+                max(1, batch.rdd.getNumPartitions() // 4))
 
         report = {"errors": {r["seqhash"]: r["error"] for r in errors},
-                  "timings": timings}
+                  "added_accessions": n["added"], "new_sequences": d["ok"],
+                  "skipped_empty": n["skipped"], "timings": timings}
         spans: dict[str, tuple[float, float]] = {}
 
         def timed(key, fn):
@@ -1450,24 +1496,12 @@ class SonarStore:
             if paranoid:
                 from covsonar_spark.operators.restore import paranoid_check
 
-                check = rec.select("accession", "seqhash", "sequence")
-                if bad_hashes:
-                    check = check.where(
-                        ~F.col("seqhash").isin(list(bad_hashes)))
+                check = batch.where(F.col("filled") & good) \
+                    .select("accession", "seqhash", "sequence")
                 futs.pop("dna_variants").result()   # paranoid's input table
                 paranoid_fut = pool.submit(
                     timed("paranoid", self._enrolled(paranoid_check)),
                     self, check)
-            # report counts run on the main thread against the cached
-            # `pre` while the appends stream in the background: one
-            # aggregate for both batch counts
-            n = pre.agg(
-                F.count(F.lit(1)).alias("all"),
-                F.count(F.when(F.length("sequence") > 0, 1)).alias("rec"),
-            ).first()
-            report.update(
-                added_accessions=n["rec"], new_sequences=ok.count(),
-                skipped_empty=n["all"] - n["rec"])
             for f in futs.values():
                 f.result()
             app = [spans[t] for t in append_jobs]
@@ -1486,8 +1520,7 @@ class SonarStore:
         if n_conflicts != 0:  # force-replace path: copy-on-write rewrite
             old = self.table("genomes")
             merged = old.join(new_genomes.select("accession"), "accession",
-                              "left_anti") \
-                        .unionByName(new_genomes.select(*gen_cols))
+                              "left_anti").unionByName(new_genomes)
             self._overwrite("genomes", merged)
             # replaced accessions may have orphaned their old seqhash
             # rows (reference delete-then-add GCs, lib/sonardb.py:1470)
@@ -1504,7 +1537,6 @@ class SonarStore:
             if self._manifest(t) is not None:
                 report[f"manifest_files_{t}"] = self.build_manifest(t)
         timings["manifest"] = time.perf_counter() - t2
-        pre.unpersist()
         return report
 
     # -- metadata update / delete / info (P4, P5, A2-A8) -------------------
@@ -1521,15 +1553,28 @@ class SonarStore:
         unknown = set(meta_cols) - {f.name for f in schemas.GENOMES.fields}
         if unknown:
             raise ValueError(f"unknown metadata columns: {sorted(unknown)}")
-        dups = [r["accession"] for r in updates.groupBy("accession").count()
-                .where(F.col("count") > 1).limit(5).collect()]
+        # one aggregate over the update and stored accessions together:
+        # per accession its update rows and whether it is stored.  The
+        # pass collects the duplicated accessions (none on an accepted
+        # update) and observes the matched count; a stored accession
+        # held twice by a legacy store still matches once
+        seen = Observation("update_tally")
+        per_acc = updates.select("accession", F.lit(1).alias("_u")) \
+            .unionByName(gen.select("accession", F.lit(0).alias("_u"))) \
+            .groupBy("accession").agg(
+                F.sum("_u").alias("n"),
+                F.count_if(F.col("_u") == 0).alias("stored")) \
+            .observe(seen, F.count_if((F.col("n") > 0) & (F.col("stored") > 0))
+                     .alias("matched"))
+        dups = [r["accession"] for r in
+                per_acc.where(F.col("n") > 1).select("accession").collect()]
         if dups:
             raise ValueError(
-                f"updates contain duplicate accessions: {dups} — a "
+                f"updates contain duplicate accessions: {dups[:5]} — a "
                 f"distributed upsert has no last-row-wins order to honor")
+        n = seen.get["matched"]
         upd = updates.select(
             "accession", *[F.col(c).alias(f"_u_{c}") for c in meta_cols])
-        n = upd.join(gen.select("accession"), "accession", "left_semi").count()
         # no broadcast hint: the updates side is unbounded (a full
         # re-annotation batch); Catalyst/AQE picks broadcast when small
         merged = gen.join(upd, "accession", "left")
@@ -1872,9 +1917,7 @@ class SonarStore:
         """Per-month lineage shares (the reference ecosystem's headline
         plot): one scan of genomes, month+lineage rollup, share via a
         window over the aggregate."""
-        from pyspark.sql import Window
-
-        g = (self.table("genomes")
+        g =(self.table("genomes")
              .where(F.col("date").isNotNull() & F.col("lineage").isNotNull()))
         counts = (g.groupBy(F.date_format("date", "yyyy-MM").alias("month"),
                             "lineage")

@@ -1,6 +1,9 @@
 """End-to-end ingest → match → restore on the reference's own CI corpus
 (test.fasta + test2.fasta), validated against expected.csv /
-expected2.csv / expected3.csv — the Spark twin of reference test.sh."""
+expected2.csv / expected3.csv — the Spark twin of reference test.sh.
+The add-semantics tests (conflicts, duplicates, skips, force, errors,
+the paranoid check) run on a synthetic one-CDS reference instead, so
+they need no reference files."""
 
 from __future__ import annotations
 
@@ -47,6 +50,41 @@ def store(spark, tmp_path_factory):
                 "chemistry": "chemistry", "material": "material", "ct": "ct",
                 "software": "software", "software_version": "software_version"}))
     return st
+
+
+@pytest.fixture(scope="module")
+def synth_ref():
+    """(reference, cds list) of a random 306-bp reference — 60-bp flanks
+    around one stop-free CDS — so the add-semantics tests need no
+    reference files."""
+    import random
+
+    from covsonar_spark.functions.genetics import CDS
+
+    rng = random.Random(11)
+    codons = [a + b + c for a in "ACGT" for b in "ACGT" for c in "ACGT"
+              if a + b + c not in ("TAA", "TAG", "TGA")]
+    gene = "ATG" + "".join(rng.choice(codons) for _ in range(60)) + "TAA"
+
+    def flank():
+        return "".join(rng.choice("ACGT") for _ in range(60))
+    ref = flank() + gene + flank()
+    return ref, [CDS("L1", "G1", [(60, 60 + len(gene))], [gene])]
+
+
+@pytest.fixture(scope="module")
+def synth_store(spark, tmp_path_factory, synth_ref):
+    """A small store on the synthetic reference holding ``test1``."""
+    ref, cds = synth_ref
+    st = SonarStore(spark, str(tmp_path_factory.mktemp("synth_db")), ref, cds)
+    rep = st.add_fasta_df(_records(spark, [("test1", "test1", ref)]))
+    assert rep["errors"] == {} and rep["paranoid_mismatches"] == []
+    return st
+
+
+def _records(spark, rows):
+    return spark.createDataFrame(
+        rows, "accession string, description string, sequence string")
 
 
 def _row_as_csv_dict(row) -> dict:
@@ -269,7 +307,8 @@ def test_per_sample_vcfs(store, tmp_path):
     assert all(ln.split("\t")[9] == "1" for ln in data)
 
 
-def test_conflicting_sequence_rejected(store, spark):
+def test_conflicting_sequence_rejected(synth_store, spark):
+    store = synth_store
     bad = spark.createDataFrame(
         [("test1", "test1 desc", "ACGT" * 100)],
         "accession string, description string, sequence string")
@@ -277,7 +316,8 @@ def test_conflicting_sequence_rejected(store, spark):
         store.add_fasta_df(bad)
 
 
-def test_within_batch_conflict_rejected(store, spark):
+def test_within_batch_conflict_rejected(synth_store, spark):
+    store = synth_store
     a = "ACGT" * 100
     b = "ACGT" * 99 + "ACGA"
     bad = spark.createDataFrame(
@@ -373,14 +413,10 @@ def test_variant_trends_and_lineage_frequencies(store):
         assert abs(sum(r["share"] for r in lf if r["month"] == m) - 1.0) < 1e-3
 
 
-def test_empty_sequence_records_are_skipped(spark, tmp_path_factory):
+def test_empty_sequence_records_are_skipped(spark, tmp_path_factory, synth_ref):
     """Header-only records must be skipped like the reference
     (sonar.py:579-580), not ingested as whole-genome deletions."""
-    from covsonar_spark.store import SonarStore
-
-    _, _, ref = read_fasta_one(f"{REF_DIR}/lib/ref.fna")
-    ref = harmonize(ref)
-    cds = parse_gff3(f"{REF_DIR}/lib/ref.gff3", ref)
+    ref, cds = synth_ref
     st = SonarStore(spark, str(tmp_path_factory.mktemp("empty_seq")), ref, cds)
     recs = spark.createDataFrame(
         [("good1", "good1", ref), ("stub1", "stub1", "")],
@@ -390,23 +426,10 @@ def test_empty_sequence_records_are_skipped(spark, tmp_path_factory):
     assert {r["accession"] for r in st.table("genomes").collect()} == {"good1"}
 
 
-def test_add_report_counts_and_phase_timings(spark, tmp_path):
+def test_add_report_counts_and_phase_timings(spark, tmp_path, synth_ref):
     """The add report carries its batch counts and non-negative wall
-    seconds for every ingest phase (synthetic one-CDS reference, so the
-    test needs no reference files)."""
-    import random
-
-    from covsonar_spark.functions.genetics import CDS
-
-    rng = random.Random(11)
-    codons = [a + b + c for a in "ACGT" for b in "ACGT" for c in "ACGT"
-              if a + b + c not in ("TAA", "TAG", "TGA")]
-    gene = "ATG" + "".join(rng.choice(codons) for _ in range(60)) + "TAA"
-
-    def flank():
-        return "".join(rng.choice("ACGT") for _ in range(60))
-    ref = flank() + gene + flank()
-    cds = [CDS("L1", "G1", [(60, 60 + len(gene))], [gene])]
+    seconds for every ingest phase."""
+    ref, cds = synth_ref
     snp = ref[:100] + ("A" if ref[100] != "A" else "C") + ref[101:]
     st = SonarStore(spark, str(tmp_path / "db"), ref, cds)
     recs = spark.createDataFrame(
@@ -422,14 +445,11 @@ def test_add_report_counts_and_phase_timings(spark, tmp_path):
     assert all(v >= 0 for v in rep["timings"].values()), rep["timings"]
 
 
-def test_description_change_conflicts_and_force_updates(spark, tmp_path_factory):
+def test_description_change_conflicts_and_force_updates(spark, tmp_path_factory,
+                                                        synth_ref):
     """Same sequence + new description: error without force
     (reference sonar.py:595-600), description updated with force."""
-    from covsonar_spark.store import SonarStore
-
-    _, _, ref = read_fasta_one(f"{REF_DIR}/lib/ref.fna")
-    ref = harmonize(ref)
-    cds = parse_gff3(f"{REF_DIR}/lib/ref.gff3", ref)
+    ref, cds = synth_ref
     st = SonarStore(spark, str(tmp_path_factory.mktemp("desc")), ref, cds)
     mk = lambda desc: spark.createDataFrame(  # noqa: E731
         [("a1", desc, ref)],
@@ -442,12 +462,9 @@ def test_description_change_conflicts_and_force_updates(spark, tmp_path_factory)
     assert len(rows) == 1 and rows[0]["description"] == "a1 CORRECTED"
 
 
-def test_force_replace_garbage_collects_old_seqhash(spark, tmp_path_factory):
-    from covsonar_spark.store import SonarStore
-
-    _, _, ref = read_fasta_one(f"{REF_DIR}/lib/ref.fna")
-    ref = harmonize(ref)
-    cds = parse_gff3(f"{REF_DIR}/lib/ref.gff3", ref)
+def test_force_replace_garbage_collects_old_seqhash(spark, tmp_path_factory,
+                                                    synth_ref):
+    ref, cds = synth_ref
     st = SonarStore(spark, str(tmp_path_factory.mktemp("gc")), ref, cds)
     v1 = ref[:-30]
     v2 = ref[:-60]
@@ -462,13 +479,121 @@ def test_force_replace_garbage_collects_old_seqhash(spark, tmp_path_factory):
     assert st.table("profiles").count() == 1
 
 
-def test_update_metadata_rejects_duplicate_accessions(spark, store):
+def test_update_metadata_rejects_duplicate_accessions(spark, synth_store):
+    store = synth_store
     from pyspark.sql import functions as F
 
     upd = spark.createDataFrame(
         [("test1", "L9"), ("test1", "L8")], "accession string, lab string")
     with pytest.raises(ValueError, match="duplicate"):
         store.update_metadata(upd)
+
+
+def test_one_sequence_under_two_accessions_stored_once(spark, tmp_path,
+                                                       synth_ref):
+    ref, cds = synth_ref
+    st = SonarStore(spark, str(tmp_path / "db"), ref, cds)
+    rep = st.add_fasta_df(_records(spark, [("a1", "a1", ref),
+                                           ("a2", "a2", ref)]))
+    assert rep["new_sequences"] == 1 and rep["added_accessions"] == 2
+    assert rep["paranoid_mismatches"] == []
+    assert st.table("sequences").count() == 1
+    assert st.table("profiles").count() == 1
+    assert sorted(r["accession"] for r in st.table("genomes").collect()) \
+        == ["a1", "a2"]
+
+
+def test_non_iupac_record_is_reported_and_not_stored(spark, tmp_path,
+                                                     synth_ref):
+    """An aligner-rejected record lands in ``report["errors"]`` and gets
+    no rows; the rest of the batch commits."""
+    from covsonar_spark.functions.genetics import seguid
+
+    ref, cds = synth_ref
+    junk = ref[:100] + "JJ" + ref[102:]
+    snp = ref[:100] + ("A" if ref[100] != "A" else "C") + ref[101:]
+    st = SonarStore(spark, str(tmp_path / "db"), ref, cds)
+    rep = st.add_fasta_df(_records(spark, [("bad", "bad", junk),
+                                           ("good", "good", snp)]))
+    assert set(rep["errors"]) == {seguid(junk)}
+    assert "non-IUPAC" in rep["errors"][seguid(junk)]
+    assert rep["new_sequences"] == 1 and rep["paranoid_mismatches"] == []
+    for t in ("sequences", "genomes", "profiles"):
+        hashes = {r["seqhash"] for r in st.table(t).collect()}
+        assert hashes == {seguid(snp)}, t
+    assert [r["accession"] for r in st.table("genomes").collect()] == ["good"]
+
+
+def test_unchanged_readd_keeps_updated_metadata(spark, tmp_path, synth_ref):
+    ref, cds = synth_ref
+    st = SonarStore(spark, str(tmp_path / "db"), ref, cds)
+    recs = _records(spark, [("a1", "a1", ref)])
+    st.add_fasta_df(recs)
+    st.update_metadata(spark.createDataFrame(
+        [("a1", "B.1.1")], "accession string, lineage string"))
+    rep = st.add_fasta_df(recs)
+    assert rep["new_sequences"] == 0 and rep["added_accessions"] == 1
+    rows = st.table("genomes").collect()
+    assert [(r["accession"], r["lineage"]) for r in rows] == [("a1", "B.1.1")]
+
+
+def test_readd_over_legacy_duplicate_rows_multiplies_nothing(spark, tmp_path,
+                                                             synth_ref):
+    """A store holding an accession twice (legacy layouts could) and a
+    NULL description: the unchanged re-add stays a no-op, a changed
+    sequence still conflicts, and no batch row multiplies."""
+    ref, cds = synth_ref
+    snp = ref[:100] + ("A" if ref[100] != "A" else "C") + ref[101:]
+    st = SonarStore(spark, str(tmp_path / "db"), ref, cds)
+    st.add_fasta_df(_records(spark, [("a1", "a1", ref), ("n1", None, snp)]))
+    with st._mutation_session():
+        st._append("genomes", st.table("genomes").where("accession = 'a1'"))
+    assert st.table("genomes").count() == 3
+    rep = st.add_fasta_df(_records(spark, [("a1", "a1", ref), ("n1", None, snp),
+                                           ("b1", "b1", snp)]))
+    assert rep["added_accessions"] == 3 and rep["new_sequences"] == 0
+    assert sorted(r["accession"] for r in st.table("genomes").collect()) \
+        == ["a1", "a1", "b1", "n1"]
+    with pytest.raises(ValueError, match="different"):
+        st.add_fasta_df(_records(spark, [("a1", "a1", snp)]))
+
+
+def test_rejected_add_leaves_no_cached_plan(spark, synth_store):
+    """An add rejected by validation pins nothing in the CacheManager."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    if not cm.isEmpty():
+        spark.catalog.clearCache()
+    a = "ACGT" * 100
+    for rows, msg in (([("dup9", "v1", a), ("dup9", "v2", a + "A")],
+                       "conflicting"),
+                      ([("test1", "test1", a)], "different")):
+        with pytest.raises(ValueError, match=msg):
+            synth_store.add_fasta_df(_records(spark, rows))
+    assert cm.isEmpty()
+
+
+def test_paranoid_check_restores_stored_rows(spark, tmp_path, synth_ref):
+    """paranoid_check returns exactly the accessions whose expected
+    sequence differs from the one restored out of the stored variants,
+    including a seqhash first stored by an earlier commit."""
+    from covsonar_spark.functions.genetics import seguid
+    from covsonar_spark.operators.restore import paranoid_check
+
+    ref, cds = synth_ref
+    snp = ref[:100] + ("A" if ref[100] != "A" else "C") + ref[101:]
+    st = SonarStore(spark, str(tmp_path / "db"), ref, cds)
+    st.add_fasta_df(_records(spark, [("wt", "wt", ref), ("snp", "snp", snp)]))
+    rep = st.add_fasta_df(_records(spark, [("snp2", "snp2", snp)]))
+    # the second add derived nothing: snp's variant rows are the first
+    # commit's
+    assert rep["new_sequences"] == 0
+    expected = spark.createDataFrame(
+        [("wt", seguid(ref), ref),           # no variant rows: the reference
+         ("snp", seguid(snp), ref),          # differs from its stored variants
+         ("snp2", seguid(snp), snp),         # earlier commit's rows, reused
+         ("snp3", seguid(snp), snp[:-1])],   # reused seqhash, wrong bytes
+        "accession string, seqhash string, sequence string")
+    assert sorted(paranoid_check(st, expected)) == ["snp", "snp3"]
 
 
 def test_match_with_dates_survives_emptied_store(spark, tmp_path_factory):
