@@ -15,3 +15,12 @@ def spark():
 
     s = get_spark("sparksonar-tests", shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture(scope="session")
+def covsonar(tmp_path_factory):
+    """covsonar's CI assets (root dir + corpus facts): its checkout when
+    present, else a synthetic bundle in the same layout."""
+    from tests.fixtures import covsonar_assets
+
+    return covsonar_assets(tmp_path_factory.mktemp("covsonar"))

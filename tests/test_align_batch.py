@@ -19,8 +19,6 @@ import pytest
 from covsonar_spark.functions.genetics import harmonize, read_fasta_one
 from covsonar_spark.operators.align import AlignmentBudgetError, BandedGotoh
 
-REF_DIR = "/root/reference"
-
 
 def _mutate(ref: str, rng: random.Random, n_snp: int, n_ins: int,
             n_del: int, n_run: bool = False) -> str:
@@ -43,8 +41,8 @@ def _mutate(ref: str, rng: random.Random, n_snp: int, n_ins: int,
 
 
 @pytest.fixture(scope="module")
-def ref_genome():
-    _, _, ref = read_fasta_one(f"{REF_DIR}/lib/ref.fna")
+def ref_genome(covsonar):
+    _, _, ref = read_fasta_one(f"{covsonar.root}/lib/ref.fna")
     return harmonize(ref)
 
 

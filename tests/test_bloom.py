@@ -75,7 +75,7 @@ def test_prefilter_skipped_when_no_usable_mask():
     assert profile_bloom_prefilter([{"dna": [], "aa": []}]) is None
 
 
-def test_store_persists_blooms_and_match_uses_them(spark, tmp_path):
+def test_store_persists_blooms_and_match_uses_them(spark, tmp_path, covsonar):
     """Ingest writes real fingerprints; the match plan contains the
     bitmask test (bloom columns read from parquet, not recomputed)."""
     from covsonar_spark.functions.genetics import (harmonize, parse_gff3,
@@ -83,18 +83,20 @@ def test_store_persists_blooms_and_match_uses_them(spark, tmp_path):
     from covsonar_spark.sources.fasta import read_fasta
     from covsonar_spark.store import SonarStore
 
-    _, _, ref = read_fasta_one("/root/reference/lib/ref.fna")
+    REF = covsonar.root
+    _, _, ref = read_fasta_one(f"{REF}/lib/ref.fna")
     ref = harmonize(ref)
-    cds = parse_gff3("/root/reference/lib/ref.gff3", ref)
+    cds = parse_gff3(f"{REF}/lib/ref.gff3", ref)
     store = SonarStore(spark, str(tmp_path / "db"), ref, cds)
-    store.add_fasta_df(read_fasta(spark, ["/root/reference/test/test.fasta"]))
+    store.add_fasta_df(read_fasta(spark, [f"{REF}/test/test.fasta"]))
     profs = store.table("profiles")
     assert "dna_bloom" in profs.columns
     rows = profs.select("dna_profile", "dna_bloom").collect()
     assert rows
     for r in rows:
         assert r["dna_bloom"] == P.bloom_mask(r["dna_profile"])
-    plan = store.match(MatchQuery(profiles=[["C241T"]]))._jdf.queryExecution() \
+    q = MatchQuery(profiles=[[covsonar.facts.shared_snp]])
+    plan = store.match(q)._jdf.queryExecution() \
         .explainString(spark._jvm.org.apache.spark.sql.execution.ExplainMode
                        .fromString("formatted"))
     assert "dna_bloom" in plan

@@ -1,5 +1,7 @@
 """CLI-level replay of the reference CI script (test.sh) through
-covsonar_spark.cli.main — the user-facing switch-over surface."""
+covsonar_spark.cli.main — the user-facing switch-over surface.  The
+corpus is covsonar's checkout or, without it, the synthetic bundle of
+tests/fixtures.py (the expected.csv golden test then skips)."""
 
 from __future__ import annotations
 
@@ -10,12 +12,12 @@ import os
 import pytest
 
 from covsonar_spark.cli import main
-
-REF = "/root/reference"
+from tests.fixtures import REFERENCE, needs_golden
 
 
 @pytest.fixture(scope="module")
-def db(spark, tmp_path_factory):
+def db(spark, tmp_path_factory, covsonar):
+    REF = covsonar.root
     d = str(tmp_path_factory.mktemp("cli_db"))
     main(["add", "--db", d, "--ref", f"{REF}/lib/ref.fna",
           "--gff", f"{REF}/lib/ref.gff3",
@@ -48,9 +50,10 @@ def _match_csv(spark, db, *argv, capsys=None):
     return list(csv.DictReader(io.StringIO(buf.getvalue())))
 
 
+@needs_golden(f"{REFERENCE}/test/expected.csv")
 def test_match_full_output_matches_expected_csv(spark, db):
     exp = {r["accession"]: r
-           for r in csv.DictReader(open(f"{REF}/test/expected.csv"))}
+           for r in csv.DictReader(open(f"{REFERENCE}/test/expected.csv"))}
     rows = _match_csv(spark, db, "--acc", *exp)
     assert {r["accession"] for r in rows} == set(exp)
     for got in rows:
@@ -63,21 +66,24 @@ def test_match_full_output_matches_expected_csv(spark, db):
                 assert got[col] == want_v, (got["accession"], col)
 
 
-def test_match_filters_and_count(spark, db, capsys):
-    rows = _match_csv(spark, db, "-i", "G1820A", "-e", "C1348T")
+def test_match_filters_and_count(spark, db, capsys, covsonar):
+    facts = covsonar.facts
+    rows = _match_csv(spark, db, "-i", facts.only_test2_snp,
+                      "-e", facts.test2_lacks_snp)
     assert [r["accession"] for r in rows] == ["test2"]
-    main(["match", "--db", db, "--count", "--lab", "l3", "--source", "sentinel"],
+    lab, source = facts.lab_source
+    main(["match", "--db", db, "--count", "--lab", lab, "--source", source],
          spark=spark)
     assert capsys.readouterr().out.strip() == "1"
 
 
-def test_restore_roundtrip(spark, db, tmp_path):
+def test_restore_roundtrip(spark, db, tmp_path, covsonar):
     out = str(tmp_path / "r.fasta")
     main(["restore", "--db", db, "--acc", "test3", "-o", out], spark=spark)
     text = open(out).read()
     assert text.startswith(">test3")
     from covsonar_spark.functions.genetics import harmonize, read_fasta_one
-    _, _, want = read_fasta_one(f"{REF}/test/test2.fasta")
+    _, _, want = read_fasta_one(f"{covsonar.root}/test/test2.fasta")
     assert text.splitlines()[1] == harmonize(want)
 
 
@@ -118,18 +124,19 @@ def test_assets_persisted(db):
     assert os.path.exists(os.path.join(db, "assets", "ref.gff3"))
 
 
-def test_sql_subcommand_queries_essence(spark, db, capsys):
+def test_sql_subcommand_queries_essence(spark, db, capsys, covsonar):
     """`sql` (the reference's dead `view` handler made functional) runs
     arbitrary SQL over the registered views and agrees with `match`."""
+    snp = covsonar.facts.shared_snp
     main(["sql", "--db", db,
           "SELECT accession FROM essence "
-          "WHERE array_contains(dna_profile, 'C241T') ORDER BY accession"],
+          f"WHERE array_contains(dna_profile, '{snp}') ORDER BY accession"],
          spark=spark)
     out = capsys.readouterr().out.strip().splitlines()
     assert out[0] == "accession"
     sql_accs = out[1:]
     # must agree with the Python match path on the same predicate
-    api = _match_csv(spark, db, "-i", "C241T")
+    api = _match_csv(spark, db, "-i", snp)
     api_accs = sorted(r["accession"] for r in api)
     assert sql_accs == api_accs and len(sql_accs) > 0
 

@@ -11,16 +11,16 @@ import shutil
 import pytest
 
 from covsonar_spark.cli import build_parser, main
+from tests.fixtures import REFERENCE, needs_golden
 
-REF = "/root/reference"
 
-
+@needs_golden(f"{REFERENCE}/sonar.py")
 def test_every_reference_flag_parses():
     """All flags scraped from the reference's argparse definitions are
     accepted by ours (on the matching subcommand)."""
     import re
 
-    src = open(f"{REF}/sonar.py").read()
+    src = open(f"{REFERENCE}/sonar.py").read()
     p = build_parser()
     sub = {a.dest: a for a in p._actions
            if isinstance(a, type(p._subparsers._group_actions[0]))}
@@ -40,7 +40,8 @@ def test_every_reference_flag_parses():
 
 
 @pytest.fixture(scope="module")
-def db(spark, tmp_path_factory):
+def db(spark, tmp_path_factory, covsonar):
+    REF = covsonar.root
     tmp = tmp_path_factory.mktemp("compat")
     fasta_dir = tmp / "fastas"
     fasta_dir.mkdir()
@@ -88,7 +89,7 @@ def test_var2vcf_output_alias_and_betaV2(spark, db, tmp_path):
     assert text.startswith("##fileformat=VCF")
 
 
-def test_forced_compression_flag(spark, tmp_path):
+def test_forced_compression_flag(spark, tmp_path, covsonar):
     """--compressed gz on a file WITHOUT a .gz extension still
     decompresses (extension detection overridden)."""
     import gzip
@@ -96,7 +97,7 @@ def test_forced_compression_flag(spark, tmp_path):
     from covsonar_spark.sources.fasta import read_fasta
 
     p = tmp_path / "noext.fasta"
-    with open(f"{REF}/test/test.fasta", "rb") as src, \
+    with open(f"{covsonar.root}/test/test.fasta", "rb") as src, \
             gzip.open(p, "wb") as dst:
         dst.write(src.read())
     df = read_fasta(spark, str(p), compressed="gz")

@@ -9,15 +9,14 @@ import pytest
 from covsonar_spark.sources.fasta import read_fasta
 from covsonar_spark.sources.fasta_datasource import register
 
-REF = "/root/reference"
-
 
 @pytest.fixture(scope="module", autouse=True)
 def _register(spark):
     register(spark)
 
 
-def test_matches_primary_reader(spark):
+def test_matches_primary_reader(spark, covsonar):
+    REF = covsonar.root
     df = spark.read.format("fasta").load(f"{REF}/test/test.fasta")
     got = {r["accession"]: (r["description"], r["sequence"])
            for r in df.collect()}
@@ -26,10 +25,10 @@ def test_matches_primary_reader(spark):
     assert got == want and len(got) == 3
 
 
-def test_split_ranges_partition_records_exactly(spark, tmp_path):
+def test_split_ranges_partition_records_exactly(spark, tmp_path, covsonar):
     """A concatenated multi-record file read with tiny split ranges
     yields every record exactly once, and genuinely fans out."""
-    src = open(f"{REF}/test/test.fasta").read()
+    src = open(f"{covsonar.root}/test/test.fasta").read()
     big = tmp_path / "big.fasta"
     with open(big, "w") as fh:
         for i in range(40):
@@ -45,25 +44,27 @@ def test_split_ranges_partition_records_exactly(spark, tmp_path):
     accs = [r["accession"] for r in rows]
     assert n_parts > 4, "tiny split size must fan the file out"
     assert len(accs) == 120 and len(set(accs)) == 120
-    assert all(len(r["sequence"]) == 29903 for r in rows)
+    lengths = covsonar.facts.record_lengths
+    assert all(len(r["sequence"]) == lengths[r["accession"].rsplit("_copy", 1)[0]]
+               for r in rows)
 
 
-def test_gz_single_partition_round_trip(spark, tmp_path):
+def test_gz_single_partition_round_trip(spark, tmp_path, covsonar):
     import gzip
     import shutil
 
     gz = tmp_path / "t.fasta.gz"
-    with open(f"{REF}/test/test.fasta", "rb") as fi, gzip.open(gz, "wb") as fo:
+    with open(f"{covsonar.root}/test/test.fasta", "rb") as fi, gzip.open(gz, "wb") as fo:
         shutil.copyfileobj(fi, fo)
     df = spark.read.format("fasta").load(str(gz))
     assert {r["accession"] for r in df.collect()} == {
         "NC_045512.2", "test1", "test2"}
 
 
-def test_write_format_round_trips(spark, tmp_path):
+def test_write_format_round_trips(spark, tmp_path, covsonar):
     """df.write.format('fasta') shards records and the reader round
     -trips them byte-for-byte (S7 as a real output format)."""
-    src = spark.read.format("fasta").load(f"{REF}/test/test.fasta")
+    src = spark.read.format("fasta").load(f"{covsonar.root}/test/test.fasta")
     out = str(tmp_path / "restored")
     src.write.format("fasta").mode("overwrite").save(out)
     back = spark.read.format("fasta").load(out + "/*.fasta")
@@ -74,11 +75,11 @@ def test_write_format_round_trips(spark, tmp_path):
     assert a == b
 
 
-def test_boundary_aligned_header_not_lost(spark, tmp_path):
+def test_boundary_aligned_header_not_lost(spark, tmp_path, covsonar):
     """Regression: a record whose '>' begins exactly at a split
     boundary must be owned by the task that starts there (plain
     seek+readline positioning silently dropped it)."""
-    src = open(f"{REF}/test/test.fasta", "rb").read()
+    src = open(f"{covsonar.root}/test/test.fasta", "rb").read()
     p = tmp_path / "b.fasta"
     p.write_bytes(src)
     second = src.index(b">", 1)          # byte offset of record 2's header

@@ -15,8 +15,6 @@ import pytest
 from covsonar_spark.sources.fasta import (iter_fasta_records, read_fasta,
                                           read_fasta_splittable)
 
-REF_DIR = "/root/reference"
-
 
 def _collect(df):
     return sorted(tuple(r) for r in df.collect())
@@ -29,12 +27,14 @@ def _pyparse(paths):
     return sorted(out)
 
 
-def test_splittable_matches_python_parser(spark):
+def test_splittable_matches_python_parser(spark, covsonar):
+    REF_DIR = covsonar.root
     paths = [f"{REF_DIR}/test/test.fasta", f"{REF_DIR}/test/test2.fasta"]
     assert _collect(read_fasta_splittable(spark, paths)) == _pyparse(paths)
 
 
-def test_gz_and_mixed_xz_union(spark, tmp_path):
+def test_gz_and_mixed_xz_union(spark, tmp_path, covsonar):
+    REF_DIR = covsonar.root
     gz = str(tmp_path / "test.fasta.gz")
     with open(f"{REF_DIR}/test/test.fasta", "rb") as src, \
             gzip.open(gz, "wb") as dst:

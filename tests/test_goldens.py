@@ -1,7 +1,9 @@
 """Golden-profile tests against the reference's own fixtures (read-only
 at /root/reference): the B.1.1.7 doctest profile, expected.csv /
 expected3.csv corpus profiles, seqhashes.  Pure-Python pipeline — no
-Spark needed (the Spark ingest wraps the same functions)."""
+Spark needed (the Spark ingest wraps the same functions).  Each golden
+test skips when its golden file is absent; the xz reader test runs on
+the synthetic bundle then (tests/fixtures.py)."""
 
 from __future__ import annotations
 
@@ -13,6 +15,7 @@ from covsonar_spark.functions.genetics import (harmonize, parse_gff3,
                                                read_fasta_one, seguid)
 from covsonar_spark.functions.tokens import AMBIG_AA, AMBIG_NT
 from covsonar_spark.operators.variants import process_sequence
+from tests.fixtures import needs_golden
 
 REF_DIR = "/root/reference"
 
@@ -67,6 +70,7 @@ def drop_ambig(profile: str, ambig: frozenset[str]) -> str:
     return " ".join(out)
 
 
+@needs_golden(f"{REF_DIR}/lib/doctest_b117.fna")
 def test_b117_golden(refdata):
     ref, cds = refdata
     _, _, seq = read_fasta_one(f"{REF_DIR}/lib/doctest_b117.fna")
@@ -76,6 +80,7 @@ def test_b117_golden(refdata):
     assert res["fs_profile"] == ""
 
 
+@needs_golden(f"{REF_DIR}/test/expected.csv")
 def test_expected_csv_corpus(refdata):
     ref, cds = refdata
     exp = {r["accession"]: r
@@ -90,6 +95,7 @@ def test_expected_csv_corpus(refdata):
         assert res["fs_profile"] == e["fs_profile"].strip(), acc
 
 
+@needs_golden(f"{REF_DIR}/test/expected3.csv")
 def test_expected3_csv_ambig_corpus(refdata):
     ref, cds = refdata
     row = next(csv.DictReader(open(f"{REF_DIR}/test/expected3.csv")))
@@ -102,7 +108,7 @@ def test_expected3_csv_ambig_corpus(refdata):
     assert res["fs_profile"] == row["fs_profile"].strip()
 
 
-def test_xz_fasta_reader():
-    _, _, plain = read_fasta_one(f"{REF_DIR}/test/test2.fasta")
-    _, _, xz = read_fasta_one(f"{REF_DIR}/test/test2.fasta.xz")
+def test_xz_fasta_reader(covsonar):
+    _, _, plain = read_fasta_one(f"{covsonar.root}/test/test2.fasta")
+    _, _, xz = read_fasta_one(f"{covsonar.root}/test/test2.fasta.xz")
     assert plain == xz

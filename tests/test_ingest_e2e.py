@@ -1,6 +1,9 @@
 """End-to-end ingest → match → restore on the reference's own CI corpus
 (test.fasta + test2.fasta), validated against expected.csv /
 expected2.csv / expected3.csv — the Spark twin of reference test.sh.
+Without covsonar's checkout the corpus is the synthetic bundle of
+tests/fixtures.py, corpus facts come from its ``facts`` record, and
+the expected*.csv golden tests skip.
 The add-semantics tests (conflicts, duplicates, skips, force, errors,
 the paranoid check) run on a synthetic one-CDS reference instead, so
 they need no reference files."""
@@ -18,21 +21,24 @@ from covsonar_spark.operators.match import MatchQuery
 from covsonar_spark.operators.restore import restore_genomes
 from covsonar_spark.sources.fasta import read_fasta
 from covsonar_spark.store import SonarStore
+from tests.fixtures import needs_golden
 
+# covsonar's checkout: only its golden expected*.csv files are read here
 REF_DIR = "/root/reference"
 
 
 @pytest.fixture(scope="module")
-def store(spark, tmp_path_factory):
-    _, _, ref = read_fasta_one(f"{REF_DIR}/lib/ref.fna")
+def store(spark, tmp_path_factory, covsonar):
+    root = covsonar.root
+    _, _, ref = read_fasta_one(f"{root}/lib/ref.fna")
     ref = harmonize(ref)
-    cds = parse_gff3(f"{REF_DIR}/lib/ref.gff3", ref)
+    cds = parse_gff3(f"{root}/lib/ref.gff3", ref)
     from covsonar_spark.operators.lineage import load_sublineage_map
     st = SonarStore(spark, str(tmp_path_factory.mktemp("sonar_db")), ref, cds,
                     sublineage_map=load_sublineage_map(
-                        f"{REF_DIR}/lib/lineage.all.tsv"))
-    records = read_fasta(spark, [f"{REF_DIR}/test/test.fasta",
-                                 f"{REF_DIR}/test/test2.fasta"])
+                        f"{root}/lib/lineage.all.tsv"))
+    records = read_fasta(spark, [f"{root}/test/test.fasta",
+                                 f"{root}/test/test2.fasta"])
     report = st.add_fasta_df(records)
     assert report["errors"] == {}
     assert report["paranoid_mismatches"] == []
@@ -40,9 +46,9 @@ def store(spark, tmp_path_factory):
     # metadata flow of reference test.sh:33-35: pangolin then tsv
     from covsonar_spark.sources.metadata import (read_metadata_csv,
                                                  read_pangolin_csv)
-    st.update_metadata(read_pangolin_csv(spark, f"{REF_DIR}/test/test_pangolin.csv"))
+    st.update_metadata(read_pangolin_csv(spark, f"{root}/test/test_pangolin.csv"))
     st.update_metadata(read_metadata_csv(
-        spark, f"{REF_DIR}/test/test.tsv.gz", sep="\t",
+        spark, f"{root}/test/test.tsv.gz", sep="\t",
         fields={"accession": "accessions", "zip": "regions", "date": "dates",
                 "gisaid": "gisaid", "ena": "ena", "lab": "lab",
                 "source": "source", "collection": "collection",
@@ -105,6 +111,7 @@ def test_counts(store):
     assert store.table("profiles").count() == 4
 
 
+@needs_golden(f"{REF_DIR}/test/expected.csv")
 def test_match_profiles_vs_expected_csv(store):
     exp = {r["accession"]: r
            for r in csv.DictReader(open(f"{REF_DIR}/test/expected.csv"))}
@@ -119,6 +126,7 @@ def test_match_profiles_vs_expected_csv(store):
         assert got["seqhash"] == e["seqhash"], acc
 
 
+@needs_golden(f"{REF_DIR}/test/expected3.csv")
 def test_match_ambig_vs_expected3_csv(store):
     row = next(csv.DictReader(open(f"{REF_DIR}/test/expected3.csv")))
     got = store.match(MatchQuery(frameshifts=1, ambig=True)).collect()
@@ -136,9 +144,9 @@ def test_frameshift_counts(store):
     assert n == 3
 
 
-def test_restore_round_trip(store):
+def test_restore_round_trip(store, covsonar):
     # test.sh:184-193 — restore byte-equals the input FASTA sequence
-    _, _, want = read_fasta_one(f"{REF_DIR}/test/test2.fasta")
+    _, _, want = read_fasta_one(f"{covsonar.root}/test/test2.fasta")
     got = restore_genomes(store, ["test3"]).collect()[0]
     assert got["sequence"] == harmonize(want)
     # every accession round-trips
@@ -147,28 +155,29 @@ def test_restore_round_trip(store):
     assert len(restored) == 4
 
 
-def test_restore_alignment(store):
+def test_restore_alignment(store, covsonar):
     """T14 — the restored aligned pair degaps back to query/reference
     and the rows align position-for-position."""
     from covsonar_spark.functions.genetics import harmonize, read_fasta_one
     from covsonar_spark.operators.restore import restore_alignments
 
     got = restore_alignments(store, ["test3"]).collect()[0]
-    _, _, want = read_fasta_one(f"{REF_DIR}/test/test2.fasta")
+    _, _, want = read_fasta_one(f"{covsonar.root}/test/test2.fasta")
     assert got["qry_aligned"].replace("-", "") == harmonize(want)
     assert got["ref_aligned"].replace("-", "") == store.ref_seq
     assert len(got["qry_aligned"]) == len(got["ref_aligned"])
 
 
-def test_readd_is_idempotent(store, spark):
+def test_readd_is_idempotent(store, spark, covsonar):
     # re-adding the same corpus creates no new sequences and keeps counts
-    records = read_fasta(spark, [f"{REF_DIR}/test/test.fasta"])
+    records = read_fasta(spark, [f"{covsonar.root}/test/test.fasta"])
     report = store.add_fasta_df(records)
     assert report["new_sequences"] == 0
     assert store.table("genomes").count() == 4
     assert store.table("profiles").count() == 4
 
 
+@needs_golden(f"{REF_DIR}/test/expected.csv")
 def test_match_full_rows_vs_expected_csv(store):
     """test.sh match 1 — every output column (22) byte-equals
     expected.csv after the metadata updates."""
@@ -201,6 +210,7 @@ def _assert_expected2(store, query):
             assert got[col] == want, col
 
 
+@needs_golden(f"{REF_DIR}/test/expected2.csv")
 def test_match_2_to_7_vs_expected2_csv(store):
     """test.sh matches 2-7: date+SNP, SNP, include+exclude, --acc,
     --zip prefix, ^-negations — all return exactly the test2 row."""
@@ -220,41 +230,39 @@ def _count(store, **kw):
     return store.match(MatchQuery(count=True, **kw)).collect()[0]["count"]
 
 
-def test_match_counts_8_to_12(store):
+def test_match_counts_8_to_12(store, covsonar):
     """test.sh matches 8-12 (post test2.fasta state): metadata combos
     incl. ct range and the software/version equality pair."""
-    assert _count(store, labs=["l3"], sources=["sentinel"]) == 1
-    assert _count(store, collections=["random"], technologies=["Illumina"]) == 2
-    assert _count(store, zips=["033"], labs=["l3"], sources=["sentinel"],
-                  collections=["RANDOM"], technologies=["illumina"],
-                  platforms=["nextseq"], chemistries=["flex", "cleanplex"],
-                  materials=["swap"], min_ct=30.0, max_ct=34.0,
-                  software="covpipe", software_version="3.0.5") == 1
-    assert _count(store, min_ct=10.0, max_ct=30.0) == 2
+    for kw, n in covsonar.facts.counts:
+        assert _count(store, **kw) == n, kw
 
 
-def test_match_with_sublineage(store):
+def test_match_with_sublineage(store, covsonar):
     """--with-sublineage: B.1.1 closes over B.1.1.189/B.1.1.297 via the
     taxonomy (F14); exact lineage B.1.1 alone matches nothing."""
-    assert _count(store, lineages=["B.1.1"]) == 0
+    facts = covsonar.facts
+    parent = facts.parent_lineage
+    assert _count(store, lineages=[parent]) == 0
     got = {r["accession"] for r in store.match(
-        MatchQuery(lineages=["B.1.1"], with_sublineage=True)).collect()}
-    assert got == {"test1", "test2"}
+        MatchQuery(lineages=[parent], with_sublineage=True)).collect()}
+    assert got == facts.parent_accessions
     # wildcard expansion (F13): B.1.1.% hits the two stored sublineages
-    assert _count(store, lineages=["B.1.1.%"]) == 2
+    assert _count(store, lineages=[parent + ".%"]) == \
+        len(facts.parent_accessions)
 
 
-def test_info(store):
+def test_info(store, covsonar):
+    want = covsonar.facts.info
     inf = store.info()
     assert inf["genomes"] == 4
     assert inf["unique_sequences"] == 4
-    assert inf["labs"] == 3
-    assert str(inf["earliest_date"]) == "2020-12-22"
-    assert str(inf["latest_date"]) == "2021-01-24"
-    assert inf["n_lineage"] == 3 and inf["n_ct"] == 3
+    assert inf["labs"] == want["labs"]
+    assert str(inf["earliest_date"]) == want["earliest_date"]
+    assert str(inf["latest_date"]) == want["latest_date"]
+    assert inf["n_lineage"] == want["n_lineage"] and inf["n_ct"] == want["n_ct"]
 
 
-def test_vcf_export(store, tmp_path):
+def test_vcf_export(store, tmp_path, covsonar):
     from covsonar_spark.operators.vcf import export_vcf
 
     out = str(tmp_path / "out.vcf")
@@ -262,10 +270,11 @@ def test_vcf_export(store, tmp_path):
     assert sites, "expected at least one VCF site row"
     by_pos = {(r["pos"], r["vcf_type"]): r for r in sites}
     # D614G: A23403G (0-based 23402) is shared by test1/test2/test3 → AC=3
-    r = by_pos[(23403, "SNP")]
-    assert r["ref"] == "A" and r["alt"] == "G" and r["an"] == 3 and r["ac"] == "3"
+    pos, ref, alt = covsonar.facts.shared_site
+    r = by_pos[(pos, "SNP")]
+    assert r["ref"] == ref and r["alt"] == alt and r["an"] == 3 and r["ac"] == "3"
     assert r["info"] == "AN=3;AC=3;TYPE=SNP"
-    assert r["vcf_id"] == "A23403G"
+    assert r["vcf_id"] == f"{ref}{pos}{alt}"
     # deletions are dropped (v2 parity); every pos is 1-based in range
     assert all(t != "DEL" for (_, t) in by_pos)
     assert all(1 <= p <= 29903 for (p, _) in by_pos)
@@ -335,7 +344,7 @@ def test_within_batch_conflict_rejected(synth_store, spark):
         store.add_fasta_df(ok)
 
 
-def test_physical_layout_and_date_pruning(store):
+def test_physical_layout_and_date_pruning(store, covsonar):
     """Post-unification physical layout: genomes live as immutable
     commit-log dirs (no hive partitioning — file statistics subsume
     it, the Delta/Iceberg trade); a dated match still answers
@@ -345,14 +354,15 @@ def test_physical_layout_and_date_pruning(store):
     dirs = store._live_dirs("genomes")
     assert dirs and all(os.sep + "_data" + os.sep in d or "/_data/" in d
                         for d in dirs), dirs
-    res = store.match(MatchQuery(dates=["2021-01-01:2021-01-31"]))
-    assert {r["accession"] for r in res.collect()} == {"NC_045512.2", "test2"}
+    facts = covsonar.facts
+    res = store.match(MatchQuery(dates=[facts.month]))
+    assert {r["accession"] for r in res.collect()} == facts.month_accessions
     # the date predicate reaches the parquet scan (row-group pruning)
     plan = res._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "date" in plan
 
 
-def test_remove_with_orphan_gc(store):
+def test_remove_with_orphan_gc(store, covsonar):
     """test.sh:195-217 — removing the last accession of a seqhash
     garbage-collects its sequence/profile/variant rows. Runs last: it
     mutates the shared store."""
@@ -366,27 +376,29 @@ def test_remove_with_orphan_gc(store):
         left = {r["seqhash"] for r in
                 store.table(t).select("seqhash").distinct().collect()}
         assert not (hash_before & left), t
-    assert _count(store, labs=["l3"], sources=["sentinel"]) == 0
+    lab, source = covsonar.facts.lab_source
+    assert _count(store, labs=[lab], sources=[source]) == 0
 
 
-def test_sql_views_answer_match_queries(spark, store):
+def test_sql_views_answer_match_queries(spark, store, covsonar):
     """register_views exposes the store to spark.sql: the essence view
     answers the reference's flagship profile+lineage match with plain
     SQL and agrees with the Python MatchQuery path."""
+    snp = covsonar.facts.shared_snp
     names = store.register_views()
     assert "essence" in names and "genomes" in names
-    sql_rows = sorted(r["accession"] for r in spark.sql("""
+    sql_rows = sorted(r["accession"] for r in spark.sql(f"""
         SELECT accession FROM essence
-        WHERE array_contains(dna_profile, 'C241T')
+        WHERE array_contains(dna_profile, '{snp}')
     """).collect())
     api_rows = sorted(
         r["accession"] for r in
-        store.match(MatchQuery(profiles=[["C241T"]]))
+        store.match(MatchQuery(profiles=[[snp]]))
         .select("accession").collect())
     assert sql_rows == api_rows and len(sql_rows) > 0
 
 
-def test_variant_trends_and_lineage_frequencies(store):
+def test_variant_trends_and_lineage_frequencies(store, covsonar):
     """Surveillance analytics over the ingested reference corpus:
     token shares and lineage shares per month sum to sensible totals."""
     trends = store.variant_trends().collect()
@@ -395,12 +407,13 @@ def test_variant_trends_and_lineage_frequencies(store):
         assert 0 < r["share"] <= 1 and r["n"] <= r["n_total"]
     # token totals agree with the store's own dated-genome counts
     # (order-robust: earlier tests mutate the shared store)
-    c241t = [r for r in trends if r["token"] == "C241T"]
+    snp = covsonar.facts.shared_snp
+    c241t = [r for r in trends if r["token"] == snp]
     from pyspark.sql import functions as F
 
     expected = (store.essence()
                 .where(F_col("date").isNotNull())
-                .where(F.array_contains("dna_profile", "C241T")).count())
+                .where(F.array_contains("dna_profile", snp)).count())
     assert c241t and sum(r["n"] for r in c241t) == expected
 
     lf = store.lineage_frequencies().collect()
@@ -596,14 +609,15 @@ def test_paranoid_check_restores_stored_rows(spark, tmp_path, synth_ref):
     assert sorted(paranoid_check(st, expected)) == ["snp", "snp3"]
 
 
-def test_match_with_dates_survives_emptied_store(spark, tmp_path_factory):
+def test_match_with_dates_survives_emptied_store(spark, tmp_path_factory,
+                                                 covsonar):
     """Date-pruned match on a store whose genomes were all removed must
     return empty, not crash on the schemaless parquet dir."""
     from covsonar_spark.store import SonarStore
 
-    _, _, ref = read_fasta_one(f"{REF_DIR}/lib/ref.fna")
+    _, _, ref = read_fasta_one(f"{covsonar.root}/lib/ref.fna")
     ref = harmonize(ref)
-    cds = parse_gff3(f"{REF_DIR}/lib/ref.gff3", ref)
+    cds = parse_gff3(f"{covsonar.root}/lib/ref.gff3", ref)
     st = SonarStore(spark, str(tmp_path_factory.mktemp("emptied")), ref, cds)
     st.add_fasta_df(spark.createDataFrame(
         [("a1", "a1", ref)],

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from covsonar_spark.operators.lineage import (Aliasor, build_sublineage_table,
                                               load_sublineage_map)
+from tests.fixtures import needs_golden
 
 REF_TSV = "/root/reference/lib/lineage.all.tsv"
 
@@ -38,6 +39,7 @@ def test_closure_with_alias(spark):
     }
 
 
+@needs_golden(REF_TSV)
 def test_closure_matches_reference_tsv_a_family(spark):
     want = {}
     with open(REF_TSV) as fh:
@@ -51,6 +53,7 @@ def test_closure_matches_reference_tsv_a_family(spark):
     assert got == want
 
 
+@needs_golden(REF_TSV)
 def test_load_sublineage_map():
     m = load_sublineage_map(REF_TSV)
     assert len(m) == 2183

@@ -15,15 +15,14 @@ from covsonar_spark.operators.restore import (apply_variants,
                                               apply_variants_aligned)
 from covsonar_spark.operators.variants import process_sequence
 
-REF_DIR = "/root/reference"
 BASES = "ACGT"
 
 
 @pytest.fixture(scope="module")
-def refdata():
-    _, _, ref = read_fasta_one(f"{REF_DIR}/lib/ref.fna")
+def refdata(covsonar):
+    _, _, ref = read_fasta_one(f"{covsonar.root}/lib/ref.fna")
     ref = harmonize(ref)
-    return ref, parse_gff3(f"{REF_DIR}/lib/ref.gff3", ref)
+    return ref, parse_gff3(f"{covsonar.root}/lib/ref.gff3", ref)
 
 
 def mutate(ref: str, ops: list[tuple[int, int, str, int]]) -> str:

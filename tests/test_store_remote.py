@@ -133,7 +133,7 @@ def test_commitlog_adopts_legacy_layout(spark, tmp_path, scheme):
     assert after == before
 
 
-def test_commitlog_ingest_update_remove_on_viewfs(spark, tmp_path):
+def test_commitlog_ingest_update_remove_on_viewfs(spark, tmp_path, covsonar):
     """The full mutation lifecycle on a remote-scheme root: open →
     ingest (atomic five-table commit) → metadata update → remove with
     orphan GC — each one commit, results identical to a local store
@@ -142,7 +142,7 @@ def test_commitlog_ingest_update_remove_on_viewfs(spark, tmp_path):
     from covsonar_spark.sources.fasta import read_fasta
     from covsonar_spark.sources.metadata import read_pangolin_csv
 
-    REF = "/root/reference"
+    REF = covsonar.root
     local = str(tmp_path / "local_db")
     st_local = SonarStore.open(spark, local, ref_path=f"{REF}/lib/ref.fna",
                                gff_path=f"{REF}/lib/ref.gff3")
@@ -162,7 +162,7 @@ def test_commitlog_ingest_update_remove_on_viewfs(spark, tmp_path):
 
     pango = read_pangolin_csv(spark, f"{REF}/test/test_pangolin.csv")
     assert st_remote.update_metadata(pango) == st_local.update_metadata(pango)
-    q = MatchQuery(lineages=["B.1.1.297"])    # test1's pangolin call
+    q = MatchQuery(lineages=[covsonar.facts.test1_lineage])
     exp = sorted(r["accession"] for r in st_local.match(q).collect())
     got = sorted(r["accession"] for r in st_remote.match(q).collect())
     assert got == exp and exp
@@ -366,13 +366,13 @@ def test_incremental_manifest_build(spark, tmp_path, monkeypatch):
     assert stv.match(q).count() == 6
 
 
-def test_ingest_keeps_manifest_pinned(spark, tmp_path):
+def test_ingest_keeps_manifest_pinned(spark, tmp_path, covsonar):
     """add_fasta_df on a commit-log store refreshes existing manifests
     incrementally, so the zero-listing pin survives ingest."""
     from covsonar_spark.operators.match import MatchQuery
     from covsonar_spark.sources.fasta import read_fasta
 
-    REF = "/root/reference"
+    REF = covsonar.root
     backing = str(tmp_path / "rdb")
     os.makedirs(backing, exist_ok=True)
     uri = _mount(spark, "vtestpin2", backing)

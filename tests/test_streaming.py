@@ -54,26 +54,27 @@ def test_native_sessions_match_batch_sessionize(spark, batch_events):
     assert got == want
 
 
-def test_streaming_genome_ingest(spark, tmp_path):
+def test_streaming_genome_ingest(spark, tmp_path, covsonar):
     """FASTA manifests landing in a watch dir drain through the full
     add pipeline; a second drain is idempotent for known files."""
     from covsonar_spark.functions.genetics import harmonize, parse_gff3, read_fasta_one
     from covsonar_spark.store import SonarStore
     from covsonar_spark.streaming.pipeline import stream_add_genomes
 
-    _, _, ref = read_fasta_one("/root/reference/lib/ref.fna")
+    REF = covsonar.root
+    _, _, ref = read_fasta_one(f"{REF}/lib/ref.fna")
     ref = harmonize(ref)
-    cds = parse_gff3("/root/reference/lib/ref.gff3", ref)
+    cds = parse_gff3(f"{REF}/lib/ref.gff3", ref)
     store = SonarStore(spark, str(tmp_path / "db"), ref, cds)
     watch = tmp_path / "landing"
     watch.mkdir()
-    (watch / "batch1.manifest").write_text("/root/reference/test/test.fasta\n".strip())
+    (watch / "batch1.manifest").write_text(f"{REF}/test/test.fasta\n".strip())
     ckpt = str(tmp_path / "ckpt")
     q = stream_add_genomes(store, str(watch), ckpt)
     q.awaitTermination(120)
     assert store.table("genomes").count() == 3
     # new file arrives; previous one is checkpointed as processed
-    (watch / "batch2.manifest").write_text("/root/reference/test/test2.fasta")
+    (watch / "batch2.manifest").write_text(f"{REF}/test/test2.fasta")
     q2 = stream_add_genomes(store, str(watch), ckpt)
     q2.awaitTermination(120)
     assert store.table("genomes").count() == 4

@@ -13,11 +13,10 @@ import pytest
 
 from covsonar_spark.cli import main
 
-REF = "/root/reference"
-
 
 @pytest.fixture(scope="module")
-def db(spark, tmp_path_factory):
+def db(spark, tmp_path_factory, covsonar):
+    REF = covsonar.root
     d = str(tmp_path_factory.mktemp("tt_db"))
     main(["add", "--db", d, "--ref", f"{REF}/lib/ref.fna",
           "--gff", f"{REF}/lib/ref.gff3",
@@ -82,12 +81,13 @@ def test_history_and_at_version_roundtrip(spark, db, tmp_path):
                 if ln.startswith("version ")]) == 3
 
 
-def test_var2vcf_at_version(spark, tmp_path):
+def test_var2vcf_at_version(spark, tmp_path, covsonar):
     """Pin an export to a version OLDER than latest: the time-travel
     VCF must equal the live export captured before the delete (and so
     still carry the deleted sample), while the live post-delete export
     must not.  Pinning latest would be tautological — it could not
     detect export_vcf's read_snapshot ignoring the at_version pin."""
+    REF = covsonar.root
     d = str(tmp_path / "vcf_tt_db")
     main(["add", "--db", d, "--ref", f"{REF}/lib/ref.fna",
           "--gff", f"{REF}/lib/ref.gff3",
@@ -120,11 +120,12 @@ def test_at_unknown_version_fails_cleanly(spark, db):
         st.match_at(MatchQuery(), 999)
 
 
-def test_vacuum_cli_bounds_time_travel(spark, tmp_path):
+def test_vacuum_cli_bounds_time_travel(spark, tmp_path, covsonar):
     """`vacuum --retain 1 --min-age-hours 0` reaps superseded versions'
     data dirs; the latest version stays fully readable and older
     versions stop being time-travelable (their commit files age out on
     the same floor)."""
+    REF = covsonar.root
     d = str(tmp_path / "vac_db")
     main(["add", "--db", d, "--ref", f"{REF}/lib/ref.fna",
           "--gff", f"{REF}/lib/ref.gff3",

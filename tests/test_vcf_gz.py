@@ -128,7 +128,7 @@ def test_tabix_index_structure_and_region_fetch(spark, tmp_path):
             fetch_region(gz, tbi, "NC_045512.2", 100, 200))
 
 
-def test_export_vcf_gz_emits_tbi(spark, tmp_path):
+def test_export_vcf_gz_emits_tbi(spark, tmp_path, covsonar):
     """export_vcf on a real ingested store writes the .tbi sidecar next
     to the .gz deliverable (reference tabix parity)."""
     from covsonar_spark.functions.genetics import (harmonize, parse_gff3,
@@ -138,7 +138,7 @@ def test_export_vcf_gz_emits_tbi(spark, tmp_path):
     from covsonar_spark.sources.tabix import fetch_region, read_tabix_index
     from covsonar_spark.store import SonarStore
 
-    REF = "/root/reference"
+    REF = covsonar.root
     _, _, ref = read_fasta_one(f"{REF}/lib/ref.fna")
     ref = harmonize(ref)
     cds = parse_gff3(f"{REF}/lib/ref.gff3", ref)
